@@ -1,5 +1,5 @@
-# One-command round evidence (VERDICT r7 item 8). Each target is a thin
-# alias for the canonical script so there is exactly one implementation.
+# One-command round evidence. Each target is a thin alias for the
+# canonical command so there is exactly one implementation.
 .PHONY: test audit bench plans evidence wrap
 
 test:
@@ -7,7 +7,7 @@ test:
 
 # dual-scale (sf0.01 + sf0.1) replay of EVERY registered oracle
 audit:
-	python docs/audit_oracles.py
+	python -m hadoop_web_browsing_logs_spark audit /root/testdata/sf0.01 /root/testdata/sf0.1
 
 bench:
 	python bench.py
@@ -18,12 +18,14 @@ plans:
 # the full round bundle: suite, dual-scale oracle audit, bench JSON
 evidence: test audit bench
 
-# Round-close hygiene (VERDICT r15 item 4: three consecutive rounds shipped
-# with driver artifacts uncommitted at judge time). Stages every driver
-# artifact the round produced, commits if anything was staged, then FAILS
-# on any remaining dirt so a forgotten file can't ride past the judge.
-# Run as the round's final act: `make wrap`.
+# Round-close hygiene, run as the round's final act: `make wrap`. Runs the
+# slow tier (the full-registry oracle and adversarial-rows audits the
+# default suite deselects) and stops on a failure, so the tier cannot be
+# skipped unnoticed. Then stages every round artifact, commits if anything
+# was staged, and FAILS on any remaining dirt so a forgotten file can't
+# go unnoticed.
 wrap:
+	python -m pytest tests/ -q -m slow -p no:cacheprovider
 	git add -A BENCH_r*.json CORRECTNESS_r*.json BENCH_DETAIL.json \
 	    BASELINE.json VERDICT.md ADVICE.md 2>/dev/null || true
 	@if ! git diff --cached --quiet; then \

@@ -20,26 +20,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hadoop_web_browsing_logs_spark.plans.registry import all_queries
-from hadoop_web_browsing_logs_spark.session import get_spark
+from hadoop_web_browsing_logs_spark.session import get_spark, release_query_caches
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 MEDIAN_OF = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-#: Opt-in: call ``session.release_caches`` after every timed query, dropping
-#: the localCheckpoint blocks queries accumulate. Round-7 measurement
-#: (SCALE.md): at sf0.1 on this box the effect is inside noise, so the
-#: default stays off; a memory-tight host can flip it on.
-RELEASE_BETWEEN = os.environ.get("SPARK_GRAFT_BENCH_RELEASE", "") == "1"
-#: Default-on (round 17, VERDICT r16 item 8): after each timed query,
-#: drop the QUERY-LOCAL cached tables and localCheckpoint blocks while
-#: keeping the adjudicated session memos (graph edge list / SemDeDup
-#: assignment / Lloyd centers) — ``session.release_query_caches``. The
-#: release runs OUTSIDE the timed span and query-local blocks are
-#: per-call by contract (never reused across calls), so no timed work
-#: changes; it stops the 56-query x 4-pass session from accumulating
-#: dead blocks that inflate LATE queries' in-bench medians 1.3-2x over
-#: their isolated medians (round-16 ledger). Set =0 to reproduce the old
-#: accumulate-everything behavior.
-RELEASE_QUERY_LOCAL = os.environ.get("SPARK_GRAFT_BENCH_RELEASE_QUERY", "1") == "1"
 
 #: Round-1 anchor (BENCH_r01.json's 21-query total): the reference publishes
 #: no numbers, so this is the standing baseline every round is graded
@@ -381,16 +365,9 @@ def main() -> None:
         t0 = time.perf_counter()
         queries[n].fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
         dt = time.perf_counter() - t0
-        if RELEASE_BETWEEN:
-            from hadoop_web_browsing_logs_spark.session import release_caches
-
-            release_caches(spark)  # outside the timed span: lifecycle hygiene,
-            # not query cost — blocks are per-call, never reused across calls
-        elif RELEASE_QUERY_LOCAL:
-            from hadoop_web_browsing_logs_spark.session import release_query_caches
-
-            release_query_caches(spark)  # outside the timed span: drops the
-            # query-local blocks just abandoned, keeps the session memos
+        # outside the timed span: drop the query-local blocks just
+        # abandoned, keep the session memos
+        release_query_caches(spark)
         return dt
 
     # Warm-up pass: full execution (JVM JIT, parquet footers, Python workers,
@@ -432,7 +409,6 @@ def main() -> None:
         "vs_r1_anchor": round(baseline_total / R1_ANCHOR_SEC, 3),
         "load_avg_1m": load_avg,
         "median_of": MEDIAN_OF,
-        "release_between": RELEASE_BETWEEN,
         "sf": float(sf) if sf else None,
     }
     # Full detail (per-query minima + every raw sample) goes to a FILE, not

@@ -5,6 +5,7 @@ Usage:
     python -m hadoop_web_browsing_logs_spark run q1_pricing_summary \
         [--sf-dir /root/testdata/sf0.01] [--limit 20] [--explain]
     python -m hadoop_web_browsing_logs_spark oracle q1_pricing_summary
+    python -m hadoop_web_browsing_logs_spark audit [sf_dir ...]
 """
 
 from __future__ import annotations
@@ -29,6 +30,11 @@ def main(argv: list[str] | None = None) -> int:
     orap = sub.add_parser("oracle", help="print a query's DuckDB oracle SQL")
     orap.add_argument("name")
 
+    audp = sub.add_parser(
+        "audit", help="replay every registered oracle against DuckDB; exit 1 on any FAIL"
+    )
+    audp.add_argument("sf_dirs", nargs="*", help="fixture directories (default: run's --sf-dir)")
+
     refp = sub.add_parser(
         "refjob",
         help="run the reference's two-job workflow (same 4 args as ProcessData.main)",
@@ -51,6 +57,25 @@ def main(argv: list[str] | None = None) -> int:
         clusters.show(truncate=100)
         print(f"wrote {args.output_dir}/inverted_index and {args.output_dir}/kmeans")
         return 0
+
+    if args.cmd == "audit":
+        from .plans.oracle import audit
+        from .session import get_spark
+
+        spark = get_spark("oracle-audit")
+        rc = 0
+        for sf_dir in args.sf_dirs or [runp.get_default("sf_dir")]:
+            n, fails = 0, []
+            for name, why in audit(spark, sf_dir):
+                n += 1
+                print(f"FAIL {name}: {why}" if why else f"ok   {name}", flush=True)
+                if why:
+                    fails.append(name)
+            print(f"\n{n - len(fails)}/{n} oracled queries match at {sf_dir}")
+            if fails:
+                print("failures:", fails)
+                rc = 1
+        return rc
 
     from .plans.registry import all_queries
 

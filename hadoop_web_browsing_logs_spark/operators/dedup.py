@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..functions.text_stats import fingerprint_md5
 from ..functions.vector import duck_cosine_similarity
 from ..plans.registry import query
+from ..session import SessionMemo
 from .vectors import DUCK_VECTORS, load_vectors
 from ._util import fan_out, t
 
@@ -2017,44 +2018,28 @@ def _build_semdedup_assign(
     )
 
 
-#: Session-scoped memo of the FIXTURE SemDeDup assignment (VERDICT r11
-#: item 4), keyed by (applicationId, sf_dir): q_dedup_semantic and
-#: q_dedup_semantic_keepfar run the identical assignment fold over the
-#: identical fixture corpus and centers — the checkpointed (vec_id,
-#: embedding, center_id, nrm) table materializes once per session, like
-#: vectors._LLOYD_MEMO one level up. The generic semantic_dedup API stays
-#: memo-free (callers own their inputs). Cleared by session.release_caches
-#: via the invalidator registry; evicted entries are best-effort
-#: unpersisted (ADVICE r11: dropping the reference alone leaks the
-#: localCheckpoint blocks until release_caches).
-_SEMDEDUP_ASSIGN_MEMO: dict[tuple[str, str], DataFrame] = {}
-_SEMDEDUP_ASSIGN_MEMO_MAX = 4
+#: The FIXTURE SemDeDup assignment, shared per (session, sf_dir):
+#: q_dedup_semantic and q_dedup_semantic_keepfar run the identical
+#: assignment fold over the identical fixture corpus and centers, so the
+#: checkpointed (vec_id, embedding, center_id, nrm) table materializes once
+#: per session, like vectors._LLOYD_MEMO one level up. The generic
+#: semantic_dedup API stays memo-free (callers own their inputs).
+_SEMDEDUP_ASSIGN_MEMO = SessionMemo()
 
-from ..session import register_memo_invalidator as _reg_inv  # noqa: E402
-from ..session import register_memo_source as _reg_src  # noqa: E402
-from ..session import unpersist_checkpoint as _unpersist  # noqa: E402
 
-_reg_inv(_SEMDEDUP_ASSIGN_MEMO.clear)
-_reg_src(lambda: list(_SEMDEDUP_ASSIGN_MEMO.values()))
+def _fixture_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .vectors import N_CENTERS, fixture_lloyd_centers
+
+    return _build_semdedup_assign(
+        load_vectors(spark, sf_dir), N_CENTERS, fixture_lloyd_centers(spark, sf_dir)
+    )
 
 
 def fixture_semdedup_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The registered SemDeDup queries' shared assignment table: memoized
     checkpoint if a variant already built it this session, else computed
     from the fixture corpus and the shared Lloyd centers and published."""
-    from .vectors import N_CENTERS, fixture_lloyd_centers
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SEMDEDUP_ASSIGN_MEMO.get(key)
-    if cached is not None:
-        return cached
-    assign = _build_semdedup_assign(
-        load_vectors(spark, sf_dir), N_CENTERS, fixture_lloyd_centers(spark, sf_dir)
-    )
-    while len(_SEMDEDUP_ASSIGN_MEMO) >= _SEMDEDUP_ASSIGN_MEMO_MAX:
-        _unpersist(_SEMDEDUP_ASSIGN_MEMO.pop(next(iter(_SEMDEDUP_ASSIGN_MEMO))))
-    _SEMDEDUP_ASSIGN_MEMO[key] = assign
-    return assign
+    return _SEMDEDUP_ASSIGN_MEMO.get_or_build(spark, sf_dir, _fixture_assign)
 
 
 def semantic_dedup(

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
+from ..session import SessionMemo
 from ._util import t
 from .relational import dsum, dsum_sql
 
@@ -227,41 +228,18 @@ def pagerank(
     return ranks
 
 
-#: Session-scoped memo of the checkpointed purchase edge list, keyed by
-#: (applicationId, sf_dir). The plain and dangling PageRank variants both
-#: start from the same lineitem⋈orders build (VERDICT r10 item 3: the two
-#: bench entries paid for it twice — 25% of headline wall); sharing the
-#: lazily-checkpointed table is the local analogue of materializing the
-#: edge list once as a warehouse table that every graph query reads — the
-#: pattern you'd ship at 100 TB. Bounded to the few most recent keys so
-#: test fixtures don't pin checkpointed RDDs forever.
-_EL_MEMO: dict[tuple[str, str], DataFrame] = {}
-_EL_MEMO_MAX = 4
-
-# release_caches unpersists every checkpoint block; a memoized plan over
-# dead blocks would crash its next consumer, so the memo clears with them
-# (round 11 — the full-suite lint caught exactly this interaction)
-from ..session import register_memo_invalidator as _reg_inv  # noqa: E402
-from ..session import register_memo_source as _reg_src  # noqa: E402
-from ..session import unpersist_checkpoint as _unpersist  # noqa: E402
-
-_reg_inv(_EL_MEMO.clear)
-_reg_src(lambda: list(_EL_MEMO.values()))
+#: The checkpointed purchase edge list, shared per (session, sf_dir). The
+#: plain and dangling PageRank variants (and the other graph queries) all
+#: start from the same lineitem⋈orders build; sharing the lazily
+#: checkpointed table is the local analogue of materializing the edge list
+#: once as a warehouse table that every graph query reads.
+_EL_MEMO = SessionMemo()
 
 
-def _purchase_el(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One DIRECTED edge customer→supplier per pair that traded, weighted by
-    lineitem count. Node ids are prefixed strings ('c'/'s') because the two
-    key spaces overlap numerically. Memoized per (session, sf_dir) as a
-    lazily-checkpointed table — the first consumer materializes the
-    join+groupBy, later graph queries in the same session reuse it."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _EL_MEMO.get(key)
-    if cached is not None:
-        return cached
+def _build_purchase_el(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    el = (
+    return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .filter(F.col("o_custkey").isNotNull() & F.col("l_suppkey").isNotNull())
         .select(
@@ -272,13 +250,15 @@ def _purchase_el(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("w"))
         .localCheckpoint(eager=False)
     )
-    while len(_EL_MEMO) >= _EL_MEMO_MAX:
-        # best-effort free of the evicted entry's checkpoint blocks
-        # (ADVICE r11: dropping the reference alone leaks them until
-        # release_caches)
-        _unpersist(_EL_MEMO.pop(next(iter(_EL_MEMO))))
-    _EL_MEMO[key] = el
-    return el
+
+
+def _purchase_el(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One DIRECTED edge customer→supplier per pair that traded, weighted by
+    lineitem count. Node ids are prefixed strings ('c'/'s') because the two
+    key spaces overlap numerically. Memoized per (session, sf_dir) as a
+    lazily-checkpointed table — the first consumer materializes the
+    join+groupBy, later graph queries in the same session reuse it."""
+    return _EL_MEMO.get_or_build(spark, sf_dir, _build_purchase_el)
 
 
 def _purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,8 +21,10 @@ Config choices are scale-motivated (see SCALE.md):
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -92,59 +94,86 @@ def get_spark(
     return spark
 
 
-#: Callbacks that drop module-level DataFrame memos (e.g. the graph
-#: operators' shared purchase-edge-list checkpoint). Registered at operator
-#: module import; release_caches MUST run them, because a memoized
-#: DataFrame whose localCheckpoint blocks were just unpersisted is a live
-#: plan over dead blocks — the next consumer would die with
-#: CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (round 11: the full pytest session hit
-#: exactly this when the release_caches pin test ran between two
-#: registry-wide plan lints).
-_MEMO_INVALIDATORS: list = []
+class SessionMemo:
+    """A bounded memo of shared ``localCheckpoint(eager=False)`` tables,
+    keyed by ``(applicationId, sf_dir)``: the graph edge list, the Lloyd
+    centers and the SemDeDup assignment that several registered queries
+    read, built once per session like a warehouse table every consumer
+    scans. Every instance registers itself with :func:`release_caches`
+    (which clears it) and :func:`release_query_caches` (which keeps it),
+    so no memo can be half-wired. Entries evicted past ``MAX_ENTRIES``
+    or displaced by :meth:`put` have their checkpoint blocks freed."""
+
+    MAX_ENTRIES = 4
+
+    def __init__(self) -> None:
+        self._entries: dict[tuple[str, str], DataFrame] = {}
+        _MEMOS.append(self)
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def get_or_build(
+        self, spark: SparkSession, sf_dir: str, build: Callable[[SparkSession, str], DataFrame]
+    ) -> DataFrame:
+        """The live entry for ``(spark, sf_dir)``, else ``build(spark,
+        sf_dir)`` published as the new entry."""
+        cached = self._entries.get((spark.sparkContext.applicationId, sf_dir))
+        if cached is not None:
+            return cached
+        return self.put(spark, sf_dir, build(spark, sf_dir))
+
+    def put(self, spark: SparkSession, sf_dir: str, df: DataFrame) -> DataFrame:
+        """Publish ``df`` (a direct lazy-``localCheckpoint`` result),
+        freeing the entry it displaces and the oldest entries past the
+        cap."""
+        key = (spark.sparkContext.applicationId, sf_dir)
+        old = self._entries.pop(key, None)
+        if old is not None:
+            unpersist_checkpoint(old)
+        while len(self._entries) >= self.MAX_ENTRIES:
+            unpersist_checkpoint(self._entries.pop(next(iter(self._entries))))
+        self._entries[key] = df
+        return df
+
+    def clear(self) -> None:
+        self._entries.clear()
+
+    def pin(self) -> set[int]:
+        """Materialize every entry and return the ids of the RDDs holding
+        their checkpoint blocks. An entry no action has run on yet still
+        reads its lineage, which may hold query-local checkpoints the
+        caller is about to drop, so it is checkpointed now. An entry that
+        cannot be materialized or identified is dropped: the next fetch
+        rebuilds it."""
+        ids: set[int] = set()
+        for key, df in list(self._entries.items()):
+            try:
+                rdd = df._jdf.queryExecution().analyzed().rdd()
+                if not rdd.isCheckpointed():
+                    rdd.count()
+                ids.add(rdd.id())
+            except Py4JError:
+                del self._entries[key]
+        return ids
 
 
-def register_memo_invalidator(fn) -> None:
-    """Register a zero-arg callable that clears a module-level DataFrame
-    memo. Called by :func:`release_caches` before blocks are dropped."""
-    _MEMO_INVALIDATORS.append(fn)
-
-
-#: Zero-arg callables returning the LIVE memoized DataFrames (each one a
-#: direct ``localCheckpoint(eager=False)`` result — the memo-store
-#: contract). :func:`release_query_caches` keeps their blocks while
-#: dropping everything else a query pinned.
-_MEMO_SOURCES: list = []
-
-
-def register_memo_source(fn) -> None:
-    """Register a zero-arg callable yielding a module memo's live
-    DataFrames, so :func:`release_query_caches` can protect their
-    checkpoint blocks."""
-    _MEMO_SOURCES.append(fn)
+_MEMOS: list[SessionMemo] = []
 
 
 def release_query_caches(spark: SparkSession) -> int:
-    """Per-query storage hygiene (VERDICT r16 item 8): drop the cached
-    DataFrames and localCheckpoint blocks the LAST query pinned, while
-    KEEPING the adjudicated session memos (graph edge list, SemDeDup
-    assignment, Lloyd centers) alive — unlike :func:`release_caches`,
-    which clears the memos too. Query-local blocks are rebuilt from
-    parquet on every call by contract, so dropping them between queries
-    changes no result and no timed work; it only stops a 56-query session
-    from accumulating dead blocks that later queries pay for in GC and
-    storage pressure.
-
-    Safety: a memoized plan over dropped blocks crashes its next consumer
-    (the round-11 lesson), so if ANY memo entry's backing RDD cannot be
-    identified the release is skipped outright (returns -1) rather than
-    guessed at. Returns the number of RDDs released otherwise."""
+    """Per-query storage hygiene: drop the cached DataFrames and
+    localCheckpoint blocks the last query pinned, while keeping every
+    :class:`SessionMemo` entry alive and usable — unlike
+    :func:`release_caches`, which clears the memos too. Query-local
+    blocks are rebuilt from parquet on every call by contract, so
+    dropping them between queries changes no result and no timed work;
+    it only stops a long session from accumulating dead blocks that
+    later queries pay for in GC and storage pressure. Returns the number
+    of RDDs released."""
     protected: set[int] = set()
-    for source in _MEMO_SOURCES:
-        for df in source():
-            try:
-                protected.add(df._jdf.queryExecution().analyzed().rdd().id())
-            except Exception:
-                return -1  # cannot prove the memo safe — keep everything
+    for memo in _MEMOS:
+        protected |= memo.pin()
     spark.catalog.clearCache()
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     released = 0
@@ -155,21 +184,18 @@ def release_query_caches(spark: SparkSession) -> int:
     return released
 
 
-def unpersist_checkpoint(df: "DataFrame") -> None:
+def unpersist_checkpoint(df: DataFrame) -> None:
     """Best-effort: free the storage blocks behind a ``localCheckpoint``'d
-    DataFrame that is being EVICTED from a memo (ADVICE r11: dropping the
-    Python reference alone leaks the checkpoint's executor storage until
-    release_caches). A lazily-checkpointed Dataset's analyzed plan is a
-    ``LogicalRDD`` wrapping the persisted RDD, reachable via py4j; anything
-    unexpected (plan shape, a dead JVM at interpreter shutdown) degrades to
-    the documented fallback — blocks live until release_caches.
+    DataFrame being evicted from a memo; dropping the Python reference
+    alone would leak them until :func:`release_caches`. A lazily
+    checkpointed Dataset's analyzed plan is a ``LogicalRDD`` wrapping the
+    persisted RDD, reachable via py4j; anything unexpected (plan shape, a
+    dead JVM at interpreter shutdown) degrades to a no-op.
 
-    Contract: a localCheckpoint's lineage is truncated, so the evicted
-    entry is UNUSABLE after this call — callers evict only entries no live
-    plan will execute again. The registered queries honor this by always
-    re-fetching through the memo accessor at build time and collecting
-    each query before the next one builds (driver/bench/pytest all run
-    sequentially)."""
+    A localCheckpoint's lineage is truncated, so the evicted entry is
+    unusable after this call. The registered queries re-fetch through the
+    memo at build time and each query is collected before the next one
+    builds, so no live plan holds an evicted entry."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
@@ -180,15 +206,15 @@ def release_caches(spark: SparkSession) -> int:
     """Drop every persisted/cached block the engine has accumulated: cached
     DataFrames (CacheManager) and the RDD blocks pinned by lazy
     ``localCheckpoint`` frames (similarity/global-rank paths — see
-    operators/similarity.py module docstring), plus every registered
-    module-level memo that references such blocks. Returns the number of
+    operators/similarity.py module docstring), and every
+    :class:`SessionMemo` entry over such blocks. Returns the number of
     persistent RDDs released.
 
     Query factories deliberately do NOT unpersist their own checkpoints (the
     consuming action happens in the caller); a long-lived session embedding
     this engine should call this between logical requests."""
-    for invalidate in _MEMO_INVALIDATORS:
-        invalidate()
+    for memo in _MEMOS:
+        memo.clear()
     spark.catalog.clearCache()
     # JavaSparkContext exposes the persistent-RDD map as a java.util.Map,
     # which py4j presents dict-like

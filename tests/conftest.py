@@ -1,19 +1,23 @@
 """Shared pytest fixtures: one SparkSession per test run, a DuckDB connection
-with the fixture tables registered, and a differential comparator that mirrors
-the driver's oracle gate (row count + schema + order-insensitive value hash).
+with the fixture tables registered, and the oracle assertion built on the
+package comparator (:mod:`hadoop_web_browsing_logs_spark.plans.oracle`).
 """
 
 from __future__ import annotations
 
-import decimal
-import math
 import os
 
 import duckdb
 import pytest
 
+# canonical_rows / duck_fetch_typed are re-exported for perfbench/oracle.py
+from hadoop_web_browsing_logs_spark.plans.oracle import (  # noqa: F401
+    canonical_rows,
+    create_views,
+    duck_fetch_typed,
+    oracle_mismatch,
+)
 from hadoop_web_browsing_logs_spark.session import get_spark
-from hadoop_web_browsing_logs_spark.sources.readers import TABLE_NAMES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_CORRECTNESS = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
@@ -26,70 +30,17 @@ def spark():
     yield s
 
 
+def _schema(sf_dir: str) -> str:
+    return "sf" + os.path.basename(sf_dir.rstrip("/")).replace("sf", "").replace(".", "_")
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()
     for sf_dir in {SF_DIR, SF_DIR_CORRECTNESS}:
-        schema = "sf" + os.path.basename(sf_dir.rstrip("/")).replace("sf", "").replace(".", "_")
-        con.execute(f"CREATE SCHEMA IF NOT EXISTS {schema}")
-        for name in TABLE_NAMES:
-            path = os.path.join(sf_dir, f"{name}.parquet")
-            con.execute(f"CREATE VIEW {schema}.{name} AS SELECT * FROM read_parquet('{path}')")
+        create_views(con, sf_dir, _schema(sf_dir))
     yield con
     con.close()
-
-
-def _canon_cell(v):
-    # Type-SENSITIVE on purpose: the driver's value-hash distinguishes numeric
-    # representations (5 vs 5.0), and round 1 shipped five queries whose only
-    # defect was an int/float type skew the old canonicalizer collapsed
-    # (VERDICT.md round 1). Prefixing by type class reproduces driver
-    # semantics locally so pytest catches skews pre-driver. decimal.Decimal
-    # (DuckDB HUGEINT/DECIMAL surfaced through Arrow) deliberately gets its
-    # own class: an uncast SUM(bigint) OVER oracle column must NOT compare
-    # equal to Spark's bigint (VERDICT r4: q_llm_pack_sequences).
-    if v is None:
-        return "\0NULL"
-    if isinstance(v, decimal.Decimal):
-        return f"d:{v}"
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, int):
-        return f"i:{v}"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "f:NaN"
-        return f"f:{v:.6f}"
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_canon_cell(x) for x in v) + "]"
-    return str(v)
-
-
-def duck_fetch_typed(res) -> tuple[list[str], list[tuple]]:
-    """Fetch a DuckDB result Arrow-typed, mirroring the driver's hash path.
-
-    ``fetchall()`` collapses HUGEINT to Python int, which masked the one
-    driver red of round 4 (q_llm_pack_sequences: uncast ``SUM(BIGINT) OVER``
-    is HUGEINT, non-int64 under the driver's Arrow-typed hash, yet equal to
-    Spark's bigint under fetchall). Going through ``res.arrow()`` keeps the
-    widened type visible: HUGEINT/DECIMAL cells arrive as decimal.Decimal,
-    which _canon_cell refuses to equate with int — so the skew fails locally
-    exactly as it does at the driver. Nulls stay None (unlike a pandas
-    fetch, which would NaN-ify nullable int columns).
-    """
-    tbl = res.arrow()
-    cols = list(tbl.column_names)
-    pycols = [tbl.column(i).to_pylist() for i in range(tbl.num_columns)]
-    rows = [tuple(r) for r in zip(*pycols)] if pycols else []
-    return cols, rows
-
-
-def canonical_rows(cols: list[str], rows: list[tuple]) -> list[tuple]:
-    """Sort columns by name, canonicalize cells, sort rows — order-insensitive
-    multiset comparison, the same shape as the driver's value-hash."""
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    canon = [tuple(_canon_cell(r[i]) for i in order) for r in rows]
-    return sorted(canon)
 
 
 def assert_query_matches_oracle(spark, duck, name: str, sf_dir: str | None = None) -> None:
@@ -101,23 +52,6 @@ def assert_query_matches_oracle(spark, duck, name: str, sf_dir: str | None = Non
     q = get_query(name)
     assert q.oracle is not None, f"{name} has no oracle"
 
-    sdf = q.fn(spark, sf_dir)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
-
-    schema = "sf" + os.path.basename(sf_dir.rstrip("/")).replace("sf", "").replace(".", "_")
-    duck.execute(f"SET schema '{schema}'")
-    res = duck.execute(q.oracle)
-    duck_cols, duck_rows = duck_fetch_typed(res)
-
-    assert sorted(c.lower() for c in spark_cols) == sorted(c.lower() for c in duck_cols), (
-        f"{name}: column mismatch spark={sorted(spark_cols)} duck={sorted(duck_cols)}"
-    )
-    assert len(spark_rows) == len(duck_rows), (
-        f"{name}: row count spark={len(spark_rows)} duck={len(duck_rows)}"
-    )
-    s_canon = canonical_rows([c.lower() for c in spark_cols], spark_rows)
-    d_canon = canonical_rows([c.lower() for c in duck_cols], duck_rows)
-    if s_canon != d_canon:
-        diffs = [(a, b) for a, b in zip(s_canon, d_canon) if a != b][:5]
-        raise AssertionError(f"{name}: value mismatch; first diffs: {diffs}")
+    duck.execute(f"SET schema '{_schema(sf_dir)}'")
+    why = oracle_mismatch(q.fn(spark, sf_dir), duck.execute(q.oracle))
+    assert why is None, f"{name}: {why}"

@@ -71,10 +71,11 @@ import shutil
 import duckdb
 import pytest
 
-from hadoop_web_browsing_logs_spark.plans.registry import all_queries
+from hadoop_web_browsing_logs_spark.plans.oracle import audit
+from hadoop_web_browsing_logs_spark.plans.registry import get_query
 from hadoop_web_browsing_logs_spark.sources.readers import TABLE_NAMES
 
-from .conftest import SF_DIR, canonical_rows, duck_fetch_typed
+from .conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")
@@ -302,59 +303,20 @@ def adversarial_sf(tmp_path_factory):
 
 
 @pytest.mark.slow
-@pytest.mark.skipif(
-    bool(os.environ.get("SPARK_GRAFT_SKIP_FULL_AUDIT")),
-    reason="SPARK_GRAFT_SKIP_FULL_AUDIT set",
-)
 def test_every_oracle_survives_adversarial_rows(spark, adversarial_sf):
-    con = duckdb.connect()
-    try:
-        for name in TABLE_NAMES:
-            con.execute(
-                f"CREATE VIEW {name} AS SELECT * FROM "
-                f"read_parquet('{os.path.join(adversarial_sf, name + '.parquet')}')"
-            )
-        failures: dict[str, str] = {}
-        audited = 0
-        for name, q in sorted(all_queries().items()):
-            if q.oracle is None:
-                continue
-            audited += 1
-            try:
-                sdf = q.fn(spark, adversarial_sf)
-                s_cols = [c.lower() for c in sdf.columns]
-                s_rows = [tuple(r) for r in sdf.collect()]
-                d_cols, d_rows = duck_fetch_typed(con.execute(q.oracle))
-                d_cols = [c.lower() for c in d_cols]
-                if sorted(s_cols) != sorted(d_cols):
-                    raise AssertionError(
-                        f"columns spark={sorted(s_cols)} duck={sorted(d_cols)}"
-                    )
-                if len(s_rows) != len(d_rows):
-                    raise AssertionError(f"rows spark={len(s_rows)} duck={len(d_rows)}")
-                if canonical_rows(s_cols, s_rows) != canonical_rows(d_cols, d_rows):
-                    diffs = [
-                        (a, b)
-                        for a, b in zip(
-                            canonical_rows(s_cols, s_rows), canonical_rows(d_cols, d_rows)
-                        )
-                        if a != b
-                    ][:3]
-                    raise AssertionError(f"values differ; first diffs: {diffs}")
-            except Exception as e:  # noqa: BLE001 — collect, report all
-                if "calibrated" in q.tags:
-                    # CALIBRATED threshold gates (recall/purity/error floors)
-                    # are tuned on the clean fixture; poisoned rows may
-                    # legitimately shift the floor — crashes still surface
-                    # via the queries the gates compose. EXACT equivalence
-                    # gates (stream==batch, golden replays) carry no such
-                    # exemption (ADVICE r7): they must hold on garbage too.
-                    continue
-                failures[name] = str(e)[:400]
-        assert audited >= 120, f"registry shrank? only {audited} oracled queries"
-        assert not failures, (
-            f"{len(failures)}/{audited} oracles crash or diverge on adversarial "
-            f"rows: {failures}"
-        )
-    finally:
-        con.close()
+    results = dict(audit(spark, adversarial_sf))
+    # CALIBRATED threshold gates (recall/purity/error floors) are tuned on
+    # the clean fixture; poisoned rows may legitimately shift the floor —
+    # crashes still surface via the queries the gates compose. EXACT
+    # equivalence gates (stream==batch, golden replays) carry no such
+    # exemption: they must hold on garbage too.
+    failures = {
+        name: why[:400]
+        for name, why in results.items()
+        if why and "calibrated" not in get_query(name).tags
+    }
+    assert len(results) >= 120, f"registry shrank? only {len(results)} oracled queries"
+    assert not failures, (
+        f"{len(failures)}/{len(results)} oracles crash or diverge on adversarial "
+        f"rows: {failures}"
+    )

@@ -1,28 +1,24 @@
-"""Full-registry oracle audit at sf0.1 as a pytest gate (VERDICT r5 item 3).
+"""Full-registry oracle audit at sf0.1 as a pytest gate.
 
 The dual-scale claim — "every oracled query matches DuckDB at sf0.1, not just
-at the sf0.001/sf0.01 fixtures the per-family tests use" — previously rested
-on manually recorded `docs/audit_oracles.py` runs. This machine-checks it on
-every full suite run: one test sweeps ALL registered oracles at
+at the sf0.001/sf0.01 fixtures the per-family tests use" — is machine-checked
+here: one test sweeps ALL registered oracles at
 ``$SPARK_GRAFT_FULL_AUDIT_SF_DIR`` (default /root/testdata/sf0.1) through the
 same Arrow-typed comparator, accumulating failures instead of stopping at the
 first so a red run names every broken query.
 
-Opt-out for quick iteration: ``SPARK_GRAFT_SKIP_FULL_AUDIT=1`` (the driver's
-per-round `pytest tests/ -x -q` run never sets it).
+It is in the ``slow`` tier: run it with ``pytest -m slow``.
 """
 
 from __future__ import annotations
 
 import os
+import warnings
 
-import duckdb
 import pytest
 
-from hadoop_web_browsing_logs_spark.plans.registry import all_queries
-from hadoop_web_browsing_logs_spark.sources.readers import TABLE_NAMES
-
-from .conftest import canonical_rows, duck_fetch_typed
+from hadoop_web_browsing_logs_spark.plans.oracle import audit
+from hadoop_web_browsing_logs_spark.plans.registry import get_query
 
 FULL_AUDIT_SF_DIR = os.environ.get(
     "SPARK_GRAFT_FULL_AUDIT_SF_DIR", "/root/testdata/sf0.1"
@@ -30,74 +26,32 @@ FULL_AUDIT_SF_DIR = os.environ.get(
 
 
 @pytest.mark.slow
-@pytest.mark.skipif(
-    bool(os.environ.get("SPARK_GRAFT_SKIP_FULL_AUDIT")),
-    reason="SPARK_GRAFT_SKIP_FULL_AUDIT set",
-)
 def test_every_oracle_matches_at_sf01(spark):
-    con = duckdb.connect()
-    try:
-        for name in TABLE_NAMES:
-            path = os.path.join(FULL_AUDIT_SF_DIR, f"{name}.parquet")
-            con.execute(
-                f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')"
-            )
-        failures: dict[str, str] = {}
-        gate_failures: dict[str, str] = {}
-        audited = 0
-        for name, q in sorted(all_queries().items()):
-            if q.oracle is None:
-                continue
-            audited += 1
-            try:
-                sdf = q.fn(spark, FULL_AUDIT_SF_DIR)
-                s_cols = [c.lower() for c in sdf.columns]
-                s_rows = [tuple(r) for r in sdf.collect()]
-                d_cols, d_rows = duck_fetch_typed(con.execute(q.oracle))
-                d_cols = [c.lower() for c in d_cols]
-                if sorted(s_cols) != sorted(d_cols):
-                    raise AssertionError(
-                        f"columns spark={sorted(s_cols)} duck={sorted(d_cols)}"
-                    )
-                if len(s_rows) != len(d_rows):
-                    raise AssertionError(
-                        f"rows spark={len(s_rows)} duck={len(d_rows)}"
-                    )
-                if canonical_rows(s_cols, s_rows) != canonical_rows(d_cols, d_rows):
-                    diffs = [
-                        (a, b)
-                        for a, b in zip(
-                            canonical_rows(s_cols, s_rows),
-                            canonical_rows(d_cols, d_rows),
-                        )
-                        if a != b
-                    ][:3]
-                    raise AssertionError(f"values differ; first diffs: {diffs}")
-            except Exception as e:  # noqa: BLE001 — collect, report all
-                # Constant-TRUE boolean gates (recall/accuracy/purity floors)
-                # are CALIBRATED at the driver's sf0.01 operating scale —
-                # e.g. the k-means purity floor has 28% headroom at sf0.01
-                # but only ~10% at sf0.1 on the round-6 fixture. A fixture
-                # regeneration nudging a threshold at a scale the gate never
-                # claimed must not red the whole suite: gates WARN here
-                # (still hard-gated at sf0.01 by the per-family tests and
-                # the driver); value oracles hard-fail.
-                if q.oracle.strip().upper() == "SELECT TRUE AS OK":
-                    gate_failures[name] = str(e)[:500]
-                else:
-                    failures[name] = str(e)[:500]
-        if gate_failures:
-            import warnings
-
-            warnings.warn(
-                f"sf0.1 threshold-gate drift (non-fatal, sf0.01-calibrated): "
-                f"{gate_failures}",
-                stacklevel=1,
-            )
-        assert audited >= 120, f"registry shrank? only {audited} oracled queries"
-        assert not failures, (
-            f"{len(failures)}/{audited} oracles diverge at {FULL_AUDIT_SF_DIR}: "
-            f"{failures}"
+    results = dict(audit(spark, FULL_AUDIT_SF_DIR))
+    failures: dict[str, str] = {}
+    gate_failures: dict[str, str] = {}
+    for name, why in results.items():
+        if not why:
+            continue
+        # Constant-TRUE boolean gates (recall/accuracy/purity floors) are
+        # CALIBRATED at the sf0.01 operating scale — e.g. the k-means
+        # purity floor has 28% headroom at sf0.01 but only ~10% at sf0.1.
+        # A fixture regeneration nudging a threshold at a scale the gate
+        # never claimed must not red the whole suite: gates WARN here
+        # (still hard-gated at sf0.01 by the per-family tests); value
+        # oracles hard-fail.
+        if get_query(name).oracle.strip().upper() == "SELECT TRUE AS OK":
+            gate_failures[name] = why[:500]
+        else:
+            failures[name] = why[:500]
+    if gate_failures:
+        warnings.warn(
+            f"sf0.1 threshold-gate drift (non-fatal, sf0.01-calibrated): "
+            f"{gate_failures}",
+            stacklevel=1,
         )
-    finally:
-        con.close()
+    assert len(results) >= 120, f"registry shrank? only {len(results)} oracled queries"
+    assert not failures, (
+        f"{len(failures)}/{len(results)} oracles diverge at {FULL_AUDIT_SF_DIR}: "
+        f"{failures}"
+    )

@@ -529,13 +529,17 @@ def test_comparator_catches_uncast_window_sum(duck):
     local tests and failed only at the driver. The Arrow-typed fetch must
     keep the widened type visible and refuse to match an int-typed engine
     result."""
-    from .conftest import canonical_rows, duck_fetch_typed
+    from hadoop_web_browsing_logs_spark.plans.oracle import canonical_rows, duck_fetch_typed
 
     res = duck.execute("SELECT SUM(x) OVER () AS s FROM (VALUES (1),(2)) t(x)")
     cols, rows = duck_fetch_typed(res)
     engine_rows = [(3,), (3,)]  # what Spark's bigint column collects to
     assert canonical_rows(cols, rows) != canonical_rows(cols, engine_rows), (
         "comparator equated HUGEINT with bigint — driver skew would pass locally"
+    )
+    # an int/float type skew must not compare equal either
+    assert canonical_rows(["v"], [(5,)]) != canonical_rows(["v"], [(5.0,)]), (
+        "comparator equated 5 with 5.0"
     )
 
 
@@ -587,6 +591,35 @@ def test_release_query_caches_keeps_memos_drops_query_blocks(spark):
     el2 = _purchase_el(spark, SF_DIR)
     assert el2 is el, "memo entry must survive the query-local release"
     assert el2.count() == memo_rows  # blocks intact — no CHECKPOINT_RDD error
+    release_caches(spark)  # leave the session clean for later tests
+
+
+def test_release_query_caches_keeps_unmaterialized_memo_usable(spark):
+    """A memo entry no action has run on yet still reads its lineage, and
+    the Lloyd centers' lineage holds kmeans' query-local lazy checkpoints.
+    Releasing query caches before the first action must not drop those
+    blocks from under the entry: both the held frame and a re-fetch stay
+    collectable (no CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)."""
+    from hadoop_web_browsing_logs_spark.operators.vectors import (
+        N_CENTERS,
+        fixture_lloyd_centers,
+    )
+    from hadoop_web_browsing_logs_spark.session import (
+        SessionMemo,
+        release_caches,
+        release_query_caches,
+    )
+
+    release_caches(spark)  # clean slate: no memos, no blocks
+    c = fixture_lloyd_centers(spark, SF_DIR)  # published, never materialized
+    # an entry that is no checkpoint cannot be pinned: it is dropped so the
+    # next fetch rebuilds it, and the release still goes ahead
+    odd = SessionMemo()
+    odd.put(spark, SF_DIR, spark.range(3))
+    assert release_query_caches(spark) > 0
+    assert len(odd) == 0
+    assert c.count() == N_CENTERS
+    assert fixture_lloyd_centers(spark, SF_DIR).count() == N_CENTERS
     release_caches(spark)  # leave the session clean for later tests
 
 
