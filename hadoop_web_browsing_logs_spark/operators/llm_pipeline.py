@@ -1422,9 +1422,9 @@ def bpe_encode(words: DataFrame, merges=BPE_ENCODE_MERGES, checkpoint_every: int
     round-trips are exact).
 
     Scale shape: dictionary encoding — callers pass DISTINCT words (the
-    vocab-sized table, like stem_terms), apply the K folds JVM-side, and
-    join the encoded vocab back onto the corpus; the corpus itself never
-    runs the fold. Merge K is bounded by the artifact (10k-100k in
+    vocab-sized table, like inverted_index's stem stage), apply the K folds
+    JVM-side, and join the encoded vocab back onto the corpus; the corpus
+    itself never runs the fold. Merge K is bounded by the artifact (10k-100k in
     production); lineage/codegen depth is truncated every
     ``checkpoint_every`` merges.
     """

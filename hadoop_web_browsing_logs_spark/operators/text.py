@@ -8,18 +8,19 @@ incidence vector per term (:454-472) → tab-separated text out (:659).
 Spark-first re-expression (one lazy DAG, no HDFS round-trip between stages):
 
     read → explode(split) → regexp_replace → broadcast ANTI-join(stopwords)
-         → pandas_udf(stem) → groupBy(term).agg(collect_set(doc_id)) → densify
+         → groupBy(token) → pandas_udf(stem) over the vocab → groupBy(term)
+         → densify (Job-1 export) | cluster_terms (Job 2)
 
 Pipeline order (strip → stopword-filter → stem) preserves the reference's
 semantics (SURVEY Q3); incidence is distinct-presence, not frequency
 (SURVEY Q1 → ``collect_set``).
 
 Scale notes: tokenization explodes rows ~100× — it runs entirely inside
-whole-stage codegen before the only wide exchange (groupBy term). Term skew
-("the"-like heads after stopword removal) is handled by Spark's partial
+whole-stage codegen before the corpus-sized exchange (groupBy token). Token
+skew ("the"-like heads after stopword removal) is handled by Spark's partial
 aggregation: per-partition collect_set shrinks the hot key before the
-shuffle. The stemmer is the single Python stage; Arrow-batched + LRU-cached
-(token distributions are Zipfian, so the cache hit rate is ~1).
+shuffle. The stemmer is the single Python stage and sees each distinct token
+once; the merge by stemmed term is vocabulary-sized.
 """
 
 from __future__ import annotations
@@ -77,33 +78,22 @@ def remove_stopwords(tokens: DataFrame, spark: SparkSession, stopwords=STOPWORDS
     return tokens.join(F.broadcast(sw), "token", "left_anti")
 
 
-def stem_terms(tokens: DataFrame) -> DataFrame:
-    """Porter-stem the token column (A7) — the engine's one pandas_udf stage.
-
-    Dictionary stemming: the UDF runs over DISTINCT tokens only (vocab-sized
-    Python/Arrow stage, ~1e8 rows at a 100 TB corpus) and the token→term map
-    joins back onto the corpus-sized stream (AQE broadcasts it while it fits,
-    falls back to a co-partitioned shuffle join beyond that). Stemming every
-    token INSTANCE would push the entire corpus through the Python boundary —
-    the reference pays exactly that cost per map call (ProcessData.java:411)."""
-    vocab = tokens.select("token").distinct().withColumn("term", stem_udf(F.col("token")))
-    return tokens.join(vocab, "token").drop("token")
-
-
-def inverted_index(spark: SparkSession, docs: DataFrame, stem: bool = True) -> DataFrame:
+def inverted_index(spark: SparkSession, docs: DataFrame, stem: bool = True, stopwords=STOPWORDS) -> DataFrame:
     """Full Job-1 parity: term → sorted distinct postings (A8+A9).
 
     Returns ``(term, postings ARRAY<INT/LONG>, df INT)``. Distinct-presence
-    semantics via ``collect_set`` (SURVEY Q1)."""
-    toks = remove_stopwords(tokenize(docs), spark)
+    semantics via ``collect_set`` (SURVEY Q1). ``stopwords`` is the list the
+    anti-join drops: the registered queries use the built-in one, ``refjob``
+    the one from its stopwords file."""
+    toks = remove_stopwords(tokenize(docs), spark, stopwords)
     if stem:
         # Stem AFTER the corpus-sized shuffle: aggregate postings by RAW
         # token first (the shuffle an inverted index needs anyway), run the
         # pandas_udf over the vocab-sized aggregate, then merge the postings
         # of raw tokens sharing a stem in a second, vocab-sized aggregation.
-        # The corpus never crosses the Python/Arrow boundary — at a 100 TB
-        # corpus the old instance-level stem shipped ~1e12 tokens through
-        # Python; this ships ~1e8 distinct ones.
+        # The corpus never crosses the Python/Arrow boundary: at a 100 TB
+        # corpus stemming every token instance would ship ~1e12 tokens
+        # through Python; this ships ~1e8 distinct ones.
         raw = toks.groupBy("token").agg(F.collect_set("doc_id").alias("p0"))
         return (
             raw.withColumn("term", stem_udf(F.col("token")))
@@ -129,6 +119,38 @@ def densify_incidence(index: DataFrame, n_docs: int, one_based: bool = True) -> 
     ids = F.sequence(F.lit(start), F.lit(start + n_docs - 1))
     return index.withColumn(
         "vec", F.transform(ids, lambda i: F.array_contains("postings", i).cast("int"))
+    )
+
+
+def cluster_terms(index: DataFrame, centers: DataFrame) -> DataFrame:
+    """Job 2 (ProcessData.java:666-678): assign each ``(term, postings)`` of
+    ``index`` to its nearest ``(center_id, postings)`` of the small
+    ``centers`` frame by cosine; return ``(cluster_id, center_id, n_members,
+    members)`` for the centers that won a term, numbered 1..k in
+    ``center_id`` order (any orderable key), members sorted.
+
+    SPARSE cosine: for 0/1 vectors a·b = |A∩B| and ‖a‖ = √|A|, so the
+    distance is O(|postings|) on the sets; densifying would cost O(n_docs)
+    per term. The argmin is ``array_min`` over ``(dist, center_id)`` structs
+    against one broadcast array, map-only; a tie goes to the lower
+    ``center_id``."""
+
+    def cand(c):
+        norms = F.sqrt(F.size("postings").cast("double")) * F.sqrt(F.size(c["postings"]).cast("double"))
+        dist = 1 - F.size(F.array_intersect("postings", c["postings"])) / norms
+        return F.struct(dist.alias("dist"), c["center_id"].alias("center_id"))
+
+    cs = centers.agg(F.collect_list(F.struct("center_id", "postings")).alias("_cs"))
+    best = F.array_min(F.transform("_cs", cand))
+    assigned = index.crossJoin(F.broadcast(cs)).select("term", best["center_id"].alias("center_id"))
+    return (
+        assigned.groupBy("center_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_members"),
+            F.concat_ws(" ", F.sort_array(F.collect_list("term"))).alias("members"),
+        )
+        .withColumn("cluster_id", F.row_number().over(W.partitionBy(one_group("center_id")).orderBy("center_id")))
+        .select("cluster_id", "center_id", "n_members", "members")
     )
 
 
@@ -454,10 +476,10 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     description=(
         "FULL reference parity in one DAG — Job 1 + Job 2 "
         "(ProcessData.java:650-678): tokenize → strip → stopword anti-join → "
-        "Porter stem → inverted index → dense incidence vectors → nearest-"
-        "center assignment (correct cosine/argmin) → deterministically "
+        "Porter stem → inverted index → sparse-cosine nearest-center "
+        "assignment (cluster_terms, shared with refjob) → deterministically "
         "numbered clusters. The reference materialized text files to HDFS "
-        "between the jobs; here it is one lazy plan with two shuffles."
+        "between the jobs; here it is one lazy plan."
     ),
 )
 def q_ref_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -503,8 +525,8 @@ def q_ref_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "The flagship DAG with stem=False and a FULL DuckDB oracle: driver-"
         "hash-proves the A8-A19 composition (inverted index → sparse-cosine "
         "nearest-center → deterministically numbered clusters) end to end, "
-        "leaving only the Porter stage (A7) golden-pinned — VERDICT r2 "
-        "item 2. Reference: ProcessData.java:650-678."
+        "leaving only the Porter stage (A7) golden-pinned. Reference: "
+        "ProcessData.java:650-678."
     ),
 )
 def q_ref_pipeline_unstemmed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -514,64 +536,16 @@ def q_ref_pipeline_unstemmed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ref_pipeline(spark: SparkSession, sf_dir: str, stem: bool) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     # the index (incl. the pandas_udf stem stage when stem=True) feeds BOTH
-    # the center selection and the assignment crossJoin — materialize it once
-    # (cache, not checkpoint: deterministic plan, so eviction-recompute is
-    # safe and the checkpoint write job is avoided)
+    # the center selection and the assignment — materialize it once (cache,
+    # not checkpoint: deterministic plan, so eviction-recompute is safe and
+    # the checkpoint write job is avoided)
     idx = inverted_index(spark, docs, stem=stem).cache()
-    # SPARSE cosine: for 0/1 incidence vectors, a·b = |A∩B| and ‖a‖ = √|A| —
-    # computed on the postings sets directly. Densifying first would cost
-    # O(n_docs) per term (quadratic overall); this is O(|postings|), which is
-    # what survives a 100 TB corpus. Dense vectors remain available via
-    # densify_incidence for reference-format export only.
-    sparse = idx.select("term", "postings")
-
-    # center set: the 4 alphabetically-first terms' vectors (stands in for
-    # centers.txt, ProcessData.java:579-590; deterministic). Distributed
-    # TakeOrdered picks them — not a row_number() window over the whole vocab
-    # (single-partition sort of ~1e8 rows at a 100 TB corpus) — and
-    # array_sort on (term, postings) structs numbers them by array position.
-    centers_arr = (
-        sparse.orderBy("term")
-        .limit(4)
-        .agg(F.array_sort(F.collect_list(F.struct("term", "postings"))).alias("_cs"))
-    )
-    # per-term argmin as array_min over per-center (dist, center_id,
-    # center_term) structs — map-only; the window form exchanged 4 rows per
-    # term just to pick the minimum. Struct comparison = ORDER BY dist,
-    # center_id (center_term is functionally dependent on center_id).
-    cand = F.transform(
-        F.col("_cs"),
-        lambda c, i: F.struct(
-            (
-                1
-                - F.size(F.array_intersect("postings", c["postings"]))
-                / (
-                    F.sqrt(F.size("postings").cast("double"))
-                    * F.sqrt(F.size(c["postings"]).cast("double"))
-                )
-            ).alias("dist"),
-            (i + F.lit(1)).alias("center_id"),
-            c["term"].alias("center_term"),
-        ),
-    )
-    assigned = (
-        sparse.crossJoin(F.broadcast(centers_arr))
-        .withColumn("_best", F.array_min(cand))
-        .select(
-            "term",
-            F.col("_best.center_id").alias("center_id"),
-            F.col("_best.center_term").alias("center_term"),
-        )
-    )
-    return (
-        assigned.groupBy("center_id", "center_term")
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.concat_ws(" ", F.sort_array(F.collect_list("term"))).alias("members"),
-        )
-        .withColumn("cluster_id", F.row_number().over(W.partitionBy(one_group("center_term")).orderBy("center_id")))
-        .select("cluster_id", "center_term", "n_members", "members")
-    )
+    # centers: the 4 alphabetically-first terms (stand-in for centers.txt,
+    # ProcessData.java:579-590), keyed by term so term order is center order.
+    # Distributed TakeOrdered picks them, not a row_number() window over the
+    # whole vocab (a single-partition sort of ~1e8 rows at a 100 TB corpus).
+    centers = idx.orderBy("term").limit(4).select(F.col("term").alias("center_id"), "postings")
+    return cluster_terms(idx, centers).withColumnRenamed("center_id", "center_term")
 
 
 @query(

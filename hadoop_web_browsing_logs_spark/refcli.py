@@ -17,7 +17,12 @@ Outputs (reference text formats):
 
 Side files match the reference's DistributedCache inputs: stopwords = one
 word per line (ProcessData.java:423-435); centers = one incidence-vector
-string per line in the same ``[v1,v2,...,]`` format (ProcessData.java:579-590).
+string per line in the same ``[v1,v2,...,]`` format (ProcessData.java:579-590):
+0/1 values, one per document.
+
+``refjob`` runs the same kernel as ``q_ref_pipeline``: ``text.inverted_index``
+builds the index and ``text.cluster_terms`` assigns and numbers the clusters;
+this module only parses the side files and writes the two text outputs.
 
 The reference's bugs are not reproduced (SURVEY Appendix A): cosine is real
 cosine (not XOR-power, B1), argmin is a real argmin (B2), no key-rewriting
@@ -29,18 +34,35 @@ single-digit dims).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from .operators._util import one_group
 
-
-def _parse_center_line(line: str) -> list[int]:
-    """Parse the reference's vector serialization ``[1,0,1,]`` (tolerates the
-    trailing comma, like TokenizerMapper2's parser — ProcessData.java:545-557,
-    but for any length/width)."""
-    body = line.strip().lstrip("[").rstrip("]")
-    return [int(x) for x in body.split(",") if x.strip() != ""]
+def _read_centers(path: str, n_docs: int) -> list[list[int]]:
+    """Parse the reference's vector serialization ``[1,0,1,]`` (trailing comma
+    tolerated, like TokenizerMapper2's parser — ProcessData.java:545-557) into
+    the 1-based positions of each center's 1s. A line that is not a 0/1
+    vector of length ``n_docs`` with a 1 has no well-defined cosine: raise
+    ``ValueError`` naming it."""
+    centers = []
+    with open(path) as fh:
+        for lineno, line in enumerate(fh, 1):
+            if not line.strip():
+                continue
+            body = line.strip().lstrip("[").rstrip("]")
+            vec = [x.strip() for x in body.split(",") if x.strip()]
+            if len(vec) != n_docs:
+                why = f"has {len(vec)} values, expected one per document ({n_docs})"
+            elif any(v not in ("0", "1") for v in vec):
+                why = "holds a value other than 0 or 1"
+            elif "1" not in vec:
+                why = "has no 1"
+            else:
+                centers.append([i for i, v in enumerate(vec, 1) if v == "1"])
+                continue
+            raise ValueError(f"{path}:{lineno}: center {why}")
+    if not centers:
+        raise ValueError(f"{path}: no centers")
+    return centers
 
 
 def run_reference_jobs(
@@ -50,59 +72,26 @@ def run_reference_jobs(
     stopwords_file: str,
     centers_file: str,
 ) -> DataFrame:
-    """Execute Job 1 + Job 2 as one lazy DAG; write both reference-format
-    outputs; return the cluster DataFrame."""
-    from .operators.text import densify_incidence, inverted_index, remove_stopwords, stem_terms, tokenize
+    """Execute Job 1 + Job 2; write both reference-format outputs; return the
+    clusters ``(cluster_id, center_id, n_members, members)``."""
+    from .operators.text import cluster_terms, densify_incidence, inverted_index
     from .sources.readers import read_corpus_dir
     from .sources.writers import write_reference_text
 
     with open(stopwords_file) as fh:
         stopwords = tuple(w.strip().lower() for w in fh if w.strip())
-    with open(centers_file) as fh:
-        centers = [_parse_center_line(ln) for ln in fh if ln.strip()]
 
     corpus = read_corpus_dir(spark, input_dir)
     n_docs = corpus.count()  # A3: corpus cardinality == vector length
+    centers = _read_centers(centers_file, n_docs)
 
-    toks = stem_terms(remove_stopwords(tokenize(corpus), spark, stopwords))
-    index = toks.groupBy("term").agg(
-        F.sort_array(F.collect_set("doc_id")).alias("postings"),
-        F.size(F.collect_set("doc_id")).alias("df"),
-    )
+    # two consumers (the Job-1 export and the assignment): build it once
+    index = inverted_index(spark, corpus, stem=True, stopwords=stopwords).cache()
     dense = densify_incidence(index, n_docs=n_docs, one_based=True)
     write_reference_text(dense, f"{output_dir}/inverted_index", term_col="term", vec_col="vec")
 
-    centers_df = spark.createDataFrame(
-        [(i + 1, vec) for i, vec in enumerate(centers)], ["center_id", "cvec"]
-    )
-    # cosine on 0/1 vectors via intersection counts (sparse-equivalent form)
-    dot = F.aggregate(
-        F.zip_with("vec", "cvec", lambda a, b: (a * b).cast("bigint")),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    norm_v = F.sqrt(F.size(F.col("postings")).cast("double"))
-    norm_c = F.sqrt(
-        F.aggregate("cvec", F.lit(0).cast("bigint"), lambda acc, x: acc + x).cast("double")
-    )
-    dist = 1 - dot / (norm_v * norm_c)
-    w = W.partitionBy("term").orderBy("dist", "center_id")
-    assigned = (
-        dense.crossJoin(F.broadcast(centers_df))
-        .select("term", "postings", "center_id", dist.alias("dist"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-    )
-    clusters = (
-        assigned.groupBy("center_id")
-        .agg(F.concat_ws(" ", F.sort_array(F.collect_list("term"))).alias("members"))
-        .withColumn("cluster", F.row_number().over(W.partitionBy(one_group("center_id")).orderBy("center_id")))
-        .select("cluster", "members")
-    )
-    (
-        clusters.sort("cluster")
-        .select(F.concat_ws("\t", F.col("cluster").cast("string"), F.col("members")).alias("value"))
-        .write.mode("overwrite")
-        .text(f"{output_dir}/kmeans")
-    )
+    centers_df = spark.createDataFrame(list(enumerate(centers, 1)), "center_id INT, postings ARRAY<INT>")
+    clusters = cluster_terms(index, centers_df)
+    kmeans = clusters.sort("cluster_id").select(F.concat_ws("\t", F.col("cluster_id").cast("string"), "members"))
+    kmeans.write.mode("overwrite").text(f"{output_dir}/kmeans")
     return clusters

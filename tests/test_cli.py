@@ -64,6 +64,16 @@ def test_corpus_reader_skips_non_numeric_filenames(spark, tmp_path):
     assert rows == {1}
 
 
+def test_cli_refjob(tmp_path):
+    """``refjob`` takes the reference main()'s four arguments and writes the
+    same k-means lines as the library call in test_text."""
+    from .test_text import REFJOB_KMEANS, _text_lines, _write_refjob_inputs
+
+    r = _run("refjob", *_write_refjob_inputs(tmp_path, "[1,0,0,]\n[0,1,0,]\n[0,0,1,]\n"))
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert _text_lines(tmp_path / "out" / "kmeans") == REFJOB_KMEANS
+
+
 def test_bench_regression_gate_fires_on_synthetic_slowdown():
     """Round 12 (VERDICT r11 item 3) + round-13 tiering (VERDICT r12 item
     4): a query >0.5 s running past its tier's gate vs the last committed

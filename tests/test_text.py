@@ -58,16 +58,7 @@ GOLDEN_STOPWORDS = ("the", "and", "a", "to", "was", "are", "about")
 @pytest.fixture(scope="module")
 def golden_index(spark):
     docs = spark.createDataFrame(CORPUS, ["doc_id", "text"])
-    idx = text_ops.inverted_index(spark, docs, stem=True)
-    # override default stopwords with the golden list
-    toks = text_ops.remove_stopwords(text_ops.tokenize(docs), spark, GOLDEN_STOPWORDS)
-    toks = text_ops.stem_terms(toks)
-    from pyspark.sql import functions as F
-
-    return toks.groupBy("term").agg(
-        F.sort_array(F.collect_set("doc_id")).alias("postings"),
-        F.size(F.collect_set("doc_id")).alias("df"),
-    )
+    return text_ops.inverted_index(spark, docs, stem=True, stopwords=GOLDEN_STOPWORDS)
 
 
 def test_golden_inverted_index(golden_index):
@@ -108,41 +99,75 @@ def test_tokenize_order_strip_then_filter_then_stem(spark):
     """SURVEY Q3: 'meeting,' must strip punctuation BEFORE the stopword check
     and stem AFTER it — 'are' (stopword) never reaches the stemmer."""
     docs = spark.createDataFrame([(1, "the cats, are meeting!")], ["doc_id", "text"])
-    toks = text_ops.remove_stopwords(text_ops.tokenize(docs), spark, GOLDEN_STOPWORDS)
-    terms = sorted(r.term for r in text_ops.stem_terms(toks).collect())
+    idx = text_ops.inverted_index(spark, docs, stem=True, stopwords=GOLDEN_STOPWORDS)
+    terms = sorted(r.term for r in idx.collect())
     assert terms == ["cat", "meet"]
 
 
-def test_refjob_end_to_end(spark, tmp_path):
-    """The drop-in reference workflow (ProcessData.main's 4-arg contract):
-    corpus dir + stopwords file + centers file → Job1 + Job2 outputs in the
-    reference's text formats."""
-    import glob
-
-    from hadoop_web_browsing_logs_spark.refcli import run_reference_jobs
-
+def _write_refjob_inputs(tmp_path, centers: str) -> list[str]:
+    """The golden corpus as ``<id>.txt`` files plus the side files; returns
+    refjob's four arguments (docs dir, output dir, stopwords, centers)."""
     docs = tmp_path / "docs"
     docs.mkdir()
     (docs / "1.txt").write_text("the cats are meeting,\nand agreed to play.")
     (docs / "2.txt").write_text("a cat was milling; ponies agreed.")
     (docs / "3.txt").write_text("meetings about caresses and ties.")
     (tmp_path / "stopwords.txt").write_text("\n".join(GOLDEN_STOPWORDS))
-    (tmp_path / "centers.txt").write_text("[1,0,0,]\n[0,1,0,]\n[0,0,1,]\n")
+    (tmp_path / "centers.txt").write_text(centers)
+    return [str(p) for p in (docs, tmp_path / "out", tmp_path / "stopwords.txt", tmp_path / "centers.txt")]
 
-    out = tmp_path / "out"
-    run_reference_jobs(
-        spark, str(docs), str(out), str(tmp_path / "stopwords.txt"), str(tmp_path / "centers.txt")
-    )
-    job1 = sorted(
-        line for f in glob.glob(f"{out}/inverted_index/part-*") for line in open(f).read().splitlines()
-    )
+
+def _text_lines(path) -> list[str]:
+    import glob
+
+    return sorted(line for f in glob.glob(f"{path}/part-*") for line in open(f).read().splitlines())
+
+
+REFJOB_KMEANS = ["1\tagre cat meet plai", "2\tmill poni", "3\tcaress ti"]
+
+
+@pytest.mark.parametrize(
+    "centers, kmeans",
+    [
+        ("[1,0,0,]\n[0,1,0,]\n[0,0,1,]\n", REFJOB_KMEANS),
+        # identical centers 1 and 2 (and "meet" ties 1 and 3): ties go to the
+        # lower center_id, and only non-empty clusters are numbered 1..k
+        ("[1,0,0,]\n[1,0,0,]\n[0,0,1,]\n", ["1\tagre cat meet mill plai poni", "2\tcaress ti"]),
+    ],
+    ids=["golden", "duplicate_centers"],
+)
+def test_refjob_end_to_end(spark, tmp_path, centers, kmeans):
+    """The drop-in reference workflow (ProcessData.main's 4-arg contract):
+    corpus dir + stopwords file + centers file → Job1 + Job2 outputs in the
+    reference's text formats."""
+    from hadoop_web_browsing_logs_spark.refcli import run_reference_jobs
+
+    run_reference_jobs(spark, *_write_refjob_inputs(tmp_path, centers))
+    job1 = _text_lines(tmp_path / "out" / "inverted_index")
     assert "cat\t[1,1,0,]" in job1
     assert "meet\t[1,0,1,]" in job1
     assert len(job1) == 8
-    job2 = sorted(
-        line for f in glob.glob(f"{out}/kmeans/part-*") for line in open(f).read().splitlines()
-    )
-    assert job2 == ["1\tagre cat meet plai", "2\tmill poni", "3\tcaress ti"]
+    assert _text_lines(tmp_path / "out" / "kmeans") == kmeans
+
+
+@pytest.mark.parametrize(
+    "centers, why",
+    [
+        ("[1,0,0,]\n[0,1,0,]\n[0,1,]\n", r"centers.txt:3: center has 2 values, expected one per document \(3\)"),
+        ("[1,0,0,]\n\n[0,2,0,]\n", r"centers.txt:3: center holds a value other than 0 or 1"),
+        ("[0,0,0,]\n[1,0,0,]\n", r"centers.txt:1: center has no 1"),
+    ],
+    ids=["short", "non_binary", "all_zero"],
+)
+def test_refjob_rejects_malformed_centers(spark, tmp_path, centers, why):
+    """A center line that is not a 0/1 vector of one value per document with
+    a 1 fails before any write (a short one used to win every term)."""
+    from hadoop_web_browsing_logs_spark.refcli import run_reference_jobs
+
+    args = _write_refjob_inputs(tmp_path, centers)
+    with pytest.raises(ValueError, match=why):
+        run_reference_jobs(spark, *args)
+    assert not (tmp_path / "out").exists()
 
 
 # --- BM25 (round 9): scalar-reference golden + ranking properties ---------
