@@ -209,9 +209,9 @@ def _prefix_threshold_fraction(tau: float):
 
 
 def _jaccard_prefix_candidates(docs: DataFrame, tau: float):
-    """The candidate stage of ``jaccard_prefix_pairs``, factored out so the
-    skew harness (docs/ab_round15.py) can count the candidate set the
-    verify join actually consumes without re-deriving the plan. Returns
+    """The candidate stage of ``jaccard_prefix_pairs``, factored out so tests
+    and the scale probes can count the candidate set the verify join
+    actually consumes without re-deriving the plan. Returns
     ``(d, cands)``: the checkpointed (doc_id, toks) table and the distinct
     (doc_a, doc_b) candidate pairs."""
     num, den = _prefix_threshold_fraction(tau)
@@ -1979,30 +1979,19 @@ def _build_semdedup_assign(
     plus the row's hoisted norm, checkpointed once because every variant
     consumes it at least twice (both sides of the pair self-join)."""
     from ..functions.vector import norm
-    from .vectors import _l2sq, lloyd_kmeans
+    from .vectors import _l2sq, lloyd_kmeans, nearest_center
 
     # pass precomputed centers to share the Lloyd materialization with
     # other consumers (the registered query reuses fixture_lloyd_centers,
     # the same K-row table q_vec_kmeans_lloyd emits)
     if centers is None:
         centers = lloyd_kmeans(vs, k)
-    c_arr = centers.agg(F.collect_list(F.struct("center_id", "c")).alias("_cs"))
-    best = F.array_min(
-        F.transform(
-            "_cs",
-            lambda c0: F.struct(
-                _l2sq("embedding", c0["c"]).alias("dist"),
-                c0["center_id"].alias("center_id"),
-            ),
-        )
-    )
     return (
-        vs.crossJoin(F.broadcast(c_arr))
-        .withColumn("_best", best)
+        nearest_center(vs, centers, lambda c: _l2sq("embedding", c["c"]))
         .select(
             "vec_id",
             "embedding",
-            F.col("_best.center_id").alias("center_id"),
+            "center_id",
             # norm once per ROW, not per pair: the within-cluster join
             # evaluates |pairs| similarity expressions, and recomputing both
             # norms inside each was 3 higher-order folds per pair instead of

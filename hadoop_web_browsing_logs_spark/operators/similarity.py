@@ -33,10 +33,11 @@ from ..functions.vector import (
     dot,
     duck_cosine_distance,
     duck_cosine_similarity,
+    norm,
 )
 from ..plans.registry import query
 from ._util import fan_out, t
-from .vectors import DUCK_VECTORS, N_CENTERS, load_vectors
+from .vectors import DUCK_VECTORS, N_CENTERS, cosine_dist, fixture_centers, load_vectors, nearest_center
 
 TOP_K = 5
 QUERY_STRIDE = 50  # vec_id % stride == 0 → query points
@@ -72,8 +73,6 @@ RANGE_TAU = 0.3
     ),
 )
 def q_sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.vector import norm
-
     e = load_vectors(spark, sf_dir)
     q = e.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
@@ -118,8 +117,6 @@ def brute_force_topk(
     threshold, a cartesian product otherwise — instead of a forced
     driver-side broadcast), and should partition the query set and loop
     rather than flip the broadcast."""
-    from ..functions.vector import norm
-
     q = queries.withColumn("q_norm", norm("q_vec"))
     # fan_out (round 17): the corpus side STREAMS through the nested-loop
     # broadcast join, so all |Q|x|C| dot folds run inside the candidate
@@ -262,15 +259,27 @@ def lsh_ann_recall(
     # and — for the margin gate — the per-query candidate-count branch both
     # read the same blocks instead of re-running band-join + cosine verify
     scored = pairs.select("q_id", "c_id", sim.alias("sim")).localCheckpoint(eager=False)
+    return _recall_at_k(spark, sf_dir, scored, include_candidate_counts)
+
+
+def _recall_at_k(
+    spark: SparkSession, sf_dir: str, scored: DataFrame, include_candidate_counts: bool = False
+) -> DataFrame:
+    """Per-query recall of an ANN index against brute force: ``scored`` holds
+    the index's verified ``(q_id, c_id, sim)`` candidates (materialized once
+    by the caller); its top-:data:`TOP_K` per query is compared with the
+    exact top-k over the fixture vectors. Returns ``(q_id, k, found,
+    recall)``, plus ``m`` (the candidate count per query) when asked."""
     w = W.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("c_id"))
-    lsh_topk = scored.withColumn("rnk", F.row_number().over(w)).filter(
+    topk = scored.withColumn("rnk", F.row_number().over(w)).filter(
         F.col("rnk") <= TOP_K
     )
 
     # the exact baseline takes its query points straight from the table — NOT
-    # from the band-exploded stream (N_BANDS rows per q_id there would make
-    # each true neighbor appear N_BANDS times in the crossJoin and collapse
-    # "top-5" to ~2 distinct neighbors, understating recall — ADVICE round 1).
+    # from an index's candidate stream (LSH emits N_BANDS rows per q_id there,
+    # which would make each true neighbor appear N_BANDS times in the
+    # crossJoin and collapse "top-5" to ~2 distinct neighbors, understating
+    # recall).
     e = load_vectors(spark, sf_dir)
     exact = brute_force_topk(
         e.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
@@ -279,19 +288,17 @@ def lsh_ann_recall(
         e.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")),
     ).select(F.col("q_id").alias("exact_q_id"), F.col("c_id").alias("exact_c_id"))
 
-    # ONE consumer for the exact baseline (round 17, guide §7.2 "duplicated
-    # subtrees"): the old shape read `exact` twice — a semi-join for the
-    # hits AND a groupBy for the per-query k — and Catalyst does not CSE
-    # across join inputs, so the brute-force crossJoin + window (the
-    # query's heaviest leg, ~1.3 s at sf0.1) EXECUTED TWICE per call.
-    # Counting from the exact side instead (left join against the LSH
-    # top-k with a hit flag) computes k and found in one aggregation over
-    # one brute-force evaluation; both sides are row_number-deduped (q, c)
-    # sets, so the flag-sum equals the old semi-join count exactly, and a
-    # query with no LSH hits sums to found = 0 like the old coalesce.
+    # ONE consumer for the exact baseline: reading `exact` twice — a
+    # semi-join for the hits AND a groupBy for the per-query k — would
+    # execute the brute-force crossJoin + window (the heaviest leg) twice,
+    # because Catalyst does not CSE across join inputs. Counting from the
+    # exact side (left join against the index top-k with a hit flag)
+    # computes k and found in one aggregation; both sides are
+    # row_number-deduped (q, c) sets, so the flag-sum equals the semi-join
+    # count exactly, and a query with no hits sums to found = 0.
     out = (
         exact.join(
-            lsh_topk.select("q_id", "c_id", F.lit(1).alias("hit")),
+            topk.select("q_id", "c_id", F.lit(1).alias("hit")),
             (F.col("q_id") == F.col("exact_q_id"))
             & (F.col("c_id") == F.col("exact_c_id")),
             "left",
@@ -350,8 +357,8 @@ def lsh_ann_recall(
     description=(
         "IVF candidate generation, hash-proved: cell assignment for every "
         "vector (the nearest-center quantizer), each query probes its 2 "
-        "nearest cells via a map-only sorted-slice over the broadcast "
-        "center array (no window exchange), and the candidate set + exact "
+        "nearest cells through the same nearest-center kernel (a map-only "
+        "top-2 over the broadcast center array), and the candidate set + exact "
         "cosine per candidate must match the quadratic DuckDB twin row for "
         "row. With the deterministic first-8 centers the whole bucketed "
         "probe path is SQL-expressible — this is the driver-hash evidence "
@@ -360,40 +367,21 @@ def lsh_ann_recall(
     ),
 )
 def q_sim_ivf_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.vector import norm
-    from .vectors import fixture_centers, nearest_center
-
-    e = load_vectors(spark, sf_dir)
-    centers = fixture_centers(spark, sf_dir)
-    cells = nearest_center(e, centers).select(
-        F.col("vec_id").alias("cell_vec"), F.col("center_id").alias("cell_center")
+    # the inverted file: every vector under its cell (its nearest fixture
+    # center, the q_vec_nearest_center quantizer); each query point probes
+    # its 2 nearest cells. _pn is the vector's norm, computed once.
+    e = load_vectors(spark, sf_dir).withColumn("_pn", norm("embedding"))
+    centers = fixture_centers(spark, sf_dir).withColumn("_cn", norm("cvec"))
+    dist = cosine_dist("embedding", "_pn")
+    data = nearest_center(e, centers, dist).select(
+        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"), F.col("_pn").alias("_dn"), "center_id"
     )
-
-    cn = centers.withColumn("_cn", norm("cvec"))
-    c_arr = cn.agg(F.collect_list(F.struct("center_id", "cvec", "_cn")).alias("_cs"))
-    qn = e.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    ).withColumn("_qn", norm("q_vec"))
-    cand = F.transform(
-        "_cs",
-        lambda c: F.struct(
-            (F.lit(1.0) - F.try_divide(dot(F.col("q_vec"), c["cvec"]), F.col("_qn") * c["_cn"])).alias("qdist"),
-            c["center_id"].alias("center_id"),
-        ),
-    )
-    probes = (
-        qn.crossJoin(F.broadcast(c_arr))
-        .select("q_id", "q_vec", "_qn", F.slice(F.array_sort(cand), 1, 2).alias("_top2"))
-        .select("q_id", "q_vec", "_qn", F.explode("_top2").alias("_p"))
-        .select("q_id", "q_vec", "_qn", F.col("_p.center_id").alias("center_id"))
-    )
-    data = e.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")).withColumn(
-        "_dn", norm("c_vec")
+    probes = nearest_center(e.filter(F.col("vec_id") % QUERY_STRIDE == 0), centers, dist, n=2).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"), F.col("_pn").alias("_qn"), "center_id"
     )
     sim = F.try_divide(dot("q_vec", "c_vec"), F.col("_qn") * F.col("_dn"))
     return (
-        probes.join(cells, probes["center_id"] == cells["cell_center"])
-        .join(data, F.col("cell_vec") == F.col("c_id"))
+        probes.join(data, "center_id")
         .filter(F.col("c_id") != F.col("q_id"))
         .select("q_id", "c_id", sim.alias("sim"))
     )
@@ -419,81 +407,10 @@ def q_sim_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ivf_ann_recall(
     spark: SparkSession, sf_dir: str, include_candidate_counts: bool = False
 ) -> DataFrame:
-    from .vectors import fixture_centers, nearest_center
-
-    e = load_vectors(spark, sf_dir)
-    centers = fixture_centers(spark, sf_dir)
-
-    # cell assignment for all vectors (the inverted file)
-    cells = nearest_center(e, centers).select("vec_id", "center_id")
-    data = e.join(cells, "vec_id").select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"), F.col("center_id")
-    )
-
-    # queries probe their 2 nearest cells
-    from ..functions.vector import dot, norm
-
-    queries = e.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    qn = queries.withColumn("_qn", norm("q_vec"))
-    cn = centers.withColumn("_cn", norm("cvec"))
-    qdist = F.lit(1.0) - F.try_divide(dot("q_vec", "cvec"), F.col("_qn") * F.col("_cn"))
-    wq = W.partitionBy("q_id").orderBy("qdist", "center_id")
-    probes = (
-        qn.crossJoin(F.broadcast(cn))
-        .select("q_id", "q_vec", "center_id", qdist.alias("qdist"))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= 2)
-        .select("q_id", "q_vec", "center_id")
-    )
-
-    # exact top-k within probed cells only; like lsh_ann_recall, the scored
-    # candidate set materializes once (lazy localCheckpoint) so the gate's
-    # candidate-count branch reuses it instead of re-probing
-    sim = cosine_similarity("q_vec", "c_vec")
-    w = W.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("c_id"))
-    scored = (
-        probes.join(data, "center_id")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id", sim.alias("sim"))
-        .localCheckpoint(eager=False)
-    )
-    ivf_topk = scored.withColumn("rnk", F.row_number().over(w)).filter(
-        F.col("rnk") <= TOP_K
-    )
-
-    exact = brute_force_topk(
-        queries,
-        e.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")),
-    ).select(F.col("q_id").alias("exact_q_id"), F.col("c_id").alias("exact_c_id"))
-    hits = ivf_topk.join(
-        exact,
-        (F.col("q_id") == F.col("exact_q_id")) & (F.col("c_id") == F.col("exact_c_id")),
-        "left_semi",
-    )
-    out = (
-        exact.groupBy("exact_q_id")
-        .agg(F.count(F.lit(1)).alias("k"))
-        .join(
-            hits.groupBy("q_id").agg(F.count(F.lit(1)).alias("found")),
-            F.col("exact_q_id") == F.col("q_id"),
-            "left",
-        )
-        .select(
-            F.col("exact_q_id").alias("q_id"),
-            "k",
-            F.coalesce("found", F.lit(0)).alias("found"),
-            (F.coalesce("found", F.lit(0)) / F.col("k")).alias("recall"),
-        )
-    )
-    if include_candidate_counts:
-        m = scored.groupBy("q_id").agg(F.count(F.lit(1)).alias("m"))
-        out = (
-            out.join(m, "q_id", "left")
-            .withColumn("m", F.coalesce("m", F.lit(0)))  # zero-candidate queries count
-        )
-    return out
+    # the scored candidates materialize once (lazy localCheckpoint) so the
+    # gate's candidate-count branch reuses them instead of re-probing
+    scored = q_sim_ivf_candidates(spark, sf_dir).localCheckpoint(eager=False)
+    return _recall_at_k(spark, sf_dir, scored, include_candidate_counts)
 
 
 # ---------------------------------------------------------------------------

@@ -131,18 +131,16 @@ def cluster_terms(index: DataFrame, centers: DataFrame) -> DataFrame:
 
     SPARSE cosine: for 0/1 vectors a·b = |A∩B| and ‖a‖ = √|A|, so the
     distance is O(|postings|) on the sets; densifying would cost O(n_docs)
-    per term. The argmin is ``array_min`` over ``(dist, center_id)`` structs
-    against one broadcast array, map-only; a tie goes to the lower
+    per term. The argmin is the shared :func:`~.vectors.nearest_center`
+    kernel: one broadcast center array, map-only, a tie goes to the lower
     ``center_id``."""
+    from .vectors import nearest_center
 
-    def cand(c):
+    def dist(c):
         norms = F.sqrt(F.size("postings").cast("double")) * F.sqrt(F.size(c["postings"]).cast("double"))
-        dist = 1 - F.size(F.array_intersect("postings", c["postings"])) / norms
-        return F.struct(dist.alias("dist"), c["center_id"].alias("center_id"))
+        return 1 - F.size(F.array_intersect("postings", c["postings"])) / norms
 
-    cs = centers.agg(F.collect_list(F.struct("center_id", "postings")).alias("_cs"))
-    best = F.array_min(F.transform("_cs", cand))
-    assigned = index.crossJoin(F.broadcast(cs)).select("term", best["center_id"].alias("center_id"))
+    assigned = nearest_center(index, centers, dist)
     return (
         assigned.groupBy("center_id")
         .agg(

@@ -9,9 +9,13 @@ deterministic numbering B4):
 
 - centers = a small DataFrame, **broadcast** (A12) as one array-of-structs row
   into a crossJoin — the same side-load the reference hand-rolled;
-- nearest center = ``array_min`` over per-center (dist, center_id) structs —
-  deterministic argmin with tie-break (A14), evaluated map-side with no
-  exchange;
+- nearest center = :func:`nearest_center`, the one Job-2 kernel every
+  assignment in the engine goes through (cosine here and in the IVF probes,
+  squared L2 in Lloyd and SemDeDup, sparse set cosine in
+  ``text.cluster_terms``). The caller passes the distance; the kernel owns
+  the layout (one broadcast center array, argmin or top-n evaluated
+  map-side with no exchange), the tie-break (lower center_id, A14) and the
+  NULL policy (a NULL distance ranks last);
 - group members = ``collect_list`` with ``sort_array`` (A16, deterministic
   where the reference depended on shuffle arrival order);
 - cluster ordinal = ``row_number() over (order by center_id)`` (A18 — global
@@ -27,11 +31,13 @@ partitioning. For k in the thousands, switch to LSH pre-bucketing
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.vector import duck_cosine_distance
+from ..functions.vector import dot, duck_cosine_distance, norm
 from ..plans.registry import query
 from ..session import SessionMemo
 from ._util import fan_out, one_group, t
@@ -46,7 +52,7 @@ N_CENTERS = 8
 #: DuckDB's range-indexed ``list_sum`` SKIPS the NULL products (dot → partial
 #: sum). So every pairwise-vector query scans through :func:`load_vectors`,
 #: which drops rows violating the contract — identically mirrored by
-#: :data:`DUCK_VECTORS` in the oracles (round-7 adversarial extension).
+#: :data:`DUCK_VECTORS` in the oracles.
 EMBEDDING_DIM = 64
 
 #: Oracle-side twin of :func:`load_vectors` — substitute for ``embeddings``.
@@ -60,8 +66,8 @@ def load_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The embeddings table under the declared-dimension contract: NULL or
     wrong-dimension vectors (dead rows, truncated writes, mixed-model
     contamination — routine at corpus scale) are excluded at the scan.
-    A vector with a NULL ELEMENT is equally garbage under the contract
-    (round 8, ADVICE r7): the engines genuinely disagree on it — Spark's
+    A vector with a NULL ELEMENT is equally garbage under the contract:
+    the engines genuinely disagree on it — Spark's
     aggregate-based dot absorbs the NULL product into a NULL sum while
     DuckDB's list_sum skips it — so it is excluded identically on both
     sides, like the wrong-dimension case."""
@@ -71,41 +77,44 @@ def load_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def nearest_center(points: DataFrame, centers: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Assign every point to its nearest center by cosine distance
-    (A13+A14, correct math). ``centers`` must have (center_id, cvec).
+def nearest_center(
+    points: DataFrame, centers: DataFrame, dist: Callable[[Column], Column], n: int = 1
+) -> DataFrame:
+    """Job 2's operator (ProcessData.java:521-536): every row of ``points``
+    with its ``n`` nearest rows of the small ``centers`` frame, as
+    ``points.* + (center_id, dist)`` — one output row per (point, rank).
 
-    The k centers are folded into ONE broadcast row holding an array of
-    (center_id, cvec, norm) structs; each point then evaluates its argmin as
-    ``array_min`` over that array — a codegen'd fold, so the assignment is
-    map-only. The earlier window form (row_number over partitionBy point)
-    exchanged k rows per point just to pick the minimum; this shape never
-    shuffles the big side at all. Tie-break parity: ``array_min`` compares
-    struct fields in order (dist, center_id) — identical to the window's
-    ORDER BY dist, center_id. Point/center norms are computed once per
-    vector, not once per (point, center) pair."""
-    from ..functions.vector import dot, norm
-
-    p = points.withColumn("_pn", norm(vec_col))
-    c = centers.withColumn("_cn", norm("cvec"))
-    c_arr = c.agg(F.collect_list(F.struct("center_id", "cvec", "_cn")).alias("_cs"))
-    best = F.array_min(
-        F.transform(
-            "_cs",
-            lambda c0: F.struct(
-                (
-                    F.lit(1.0)
-                    - F.try_divide(dot(F.col(vec_col), c0["cvec"]), F.col("_pn") * c0["_cn"])
-                ).alias("dist"),
-                c0["center_id"].alias("center_id"),
-            ),
-        )
+    ``dist`` maps a center struct (every column of ``centers``; it must
+    have ``center_id``) to its DOUBLE distance from the current point row.
+    The centers are folded into ONE broadcast row holding an array of
+    structs, so the big side never shuffles: for ``n=1`` the argmin is an
+    ``array_min`` fold, for ``n>1`` the top ``n`` come from a sorted slice,
+    both map-side. The ordering key is ``(dist IS NULL, dist, center_id)``:
+    a tie goes to the lower ``center_id`` and a NULL distance (zero-norm
+    cosine, ragged L2) sorts last, exactly like an oracle's
+    ``ORDER BY dist, center_id``. Each distance is evaluated once; the
+    NULL flag is added by a second pass over the k-element array."""
+    cs = centers.agg(F.collect_list(F.struct(*centers.columns)).alias("_cs"))
+    scored = F.transform(
+        F.transform("_cs", lambda c: F.struct(dist(c).alias("dist"), c["center_id"].alias("center_id"))),
+        lambda s: F.struct(
+            s["dist"].isNull().alias("_null"), s["dist"].alias("dist"), s["center_id"].alias("center_id")
+        ),
     )
+    best = F.array_min(scored) if n == 1 else F.explode(F.slice(F.array_sort(scored), 1, n))
     return (
-        p.crossJoin(F.broadcast(c_arr))
-        .withColumn("_best", best)
-        .select(id_col, F.col("_best.center_id").alias("center_id"), F.col("_best.dist").alias("dist"))
+        points.crossJoin(F.broadcast(cs))
+        .select(*points.columns, best.alias("_best"))
+        .select(*points.columns, "_best.center_id", "_best.dist")
     )
+
+
+def cosine_dist(vec: str, vnorm: str) -> Callable[[Column], Column]:
+    """``dist`` for :func:`nearest_center`: cosine distance from the row's
+    ``vec`` (norm column ``vnorm``) to a center's ``cvec`` (norm ``_cn``).
+    Norms are precomputed once per vector, not per (point, center) pair;
+    a zero norm makes the distance NULL."""
+    return lambda c: F.lit(1.0) - F.try_divide(dot(F.col(vec), c["cvec"]), F.col(vnorm) * c["_cn"])
 
 
 def fixture_centers(spark: SparkSession, sf_dir: str, k: int = N_CENTERS) -> DataFrame:
@@ -139,11 +148,13 @@ _DUCK_ASSIGN = f"""
     SELECT vec_id, center_id, dist FROM assign WHERE rn = 1
     """,
     category="vector",
-    description="Nearest-center assignment: broadcast crossJoin + deterministic argmin window (reference Job 2 map, ProcessData.java:521-536, with B1/B2 bugs fixed).",
+    description="Nearest-center assignment: broadcast crossJoin + deterministic map-side argmin (reference Job 2 map, ProcessData.java:521-536, with B1/B2 bugs fixed).",
 )
 def q_vec_nearest_center(spark: SparkSession, sf_dir: str) -> DataFrame:
-    points = load_vectors(spark, sf_dir)
-    return nearest_center(points, fixture_centers(spark, sf_dir))
+    points = load_vectors(spark, sf_dir).withColumn("_pn", norm("embedding"))
+    centers = fixture_centers(spark, sf_dir).withColumn("_cn", norm("cvec"))
+    assign = nearest_center(points, centers, cosine_dist("embedding", "_pn"))
+    return assign.select("vec_id", "center_id", "dist")
 
 
 @query(
@@ -191,8 +202,8 @@ def q_vec_cluster_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     -- int8 quantization is only defined for finite vectors: a NaN/Inf
     -- element poisons the max-abs scale and crashes the integer cast in
-    -- BOTH engines — excluded identically on both sides (round 7). The
-    -- `x IS NULL OR` arm (round 8, ADVICE r7): a NULL element must also
+    -- BOTH engines — excluded identically on both sides. The
+    -- `x IS NULL OR` arm: a NULL element must also
     -- disqualify the vector on BOTH sides — without it DuckDB's
     -- list_filter silently dropped NULL elements from the check (kept the
     -- row) while Spark's forall evaluated NULL (filtered the row).
@@ -237,7 +248,7 @@ def q_vec_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     # finite NON-NULL vectors only, mirroring the oracle: abs(x) < inf is
     # false for both ±Inf and NaN (Spark orders NaN above Infinity), and the
     # explicit isNotNull arm makes a NULL element a definite disqualifier on
-    # both engines instead of a three-valued-logic divergence (ADVICE r7)
+    # both engines instead of a three-valued-logic divergence
     finite = F.forall("xd", lambda x: x.isNotNull() & (F.abs(x) < F.lit(float("inf"))))
     scale = F.greatest(F.array_max(F.transform("xd", F.abs)), F.lit(1e-30))
     quant = F.transform("xd", lambda x: F.floor(x * 127.0 / F.col("scale") + 0.5).cast("long"))
@@ -299,8 +310,8 @@ def q_vec_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the near-isotropic fixture, so an occasional empty cell after a "
         "fixture regeneration must not red the gate), every embedding "
         "assigned exactly once (member counts sum to the table count), and "
-        "weighted purity above the 0.113 floor — re-derived round 12 as "
-        "margin-over-measured-baseline (VERDICT r11 item 5): the midpoint "
+        "weighted purity above the 0.113 floor, set as "
+        "margin-over-measured-baseline: the midpoint "
         "between the 0.1 random (1/k) baseline and the worst of an 8-seed "
         "sweep (0.126 at sf0.1; SCALE.md), replacing the 0.12 guess that "
         "left only 5% margin to a seed redraw. Converts the "
@@ -327,7 +338,7 @@ def q_vec_kmeans_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 9: covariance matrix of the embedding corpus — the d×d reduction
+# Covariance matrix of the embedding corpus — the d×d reduction
 # PCA / whitening / decorrelation preprocessing starts from.
 # ---------------------------------------------------------------------------
 
@@ -380,7 +391,7 @@ def q_vec_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .relational import dsum
 
     d = EMBEDDING_DIM
-    # fan_out (round 17): the single-row-group embeddings scan is ONE task,
+    # fan_out: the single-row-group embeddings scan is ONE task,
     # so the d tail-product arrays + the 64-column quantized partial sums —
     # the whole query's scalar work — ran on one core (driver bench read
     # FLAT 8v32 ratios, 0.87/1.04 at sf0.1/sf1.0). Spreading the raw
@@ -390,7 +401,7 @@ def q_vec_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Interleaved A/B at sf0.1: 3.72 -> 2.39 s.
     vs = fan_out(load_vectors(spark, sf_dir))
     n = vs.agg(F.count(F.lit(1)).cast("double").alias("n"))
-    # ROW-PER-(vector, i) shape (round 16, guide §1.2 "per-task work"): the
+    # ROW-PER-(vector, i) shape: the
     # original form exploded one STRUCT ROW per product — n·d(d+1)/2 rows
     # (10.4M at sf0.1) through generate + hash-agg probing. Here each
     # vector emits d rows, row i carrying the tail-product ARRAY for
@@ -576,7 +587,7 @@ def q_vec_covariance_fast_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 10 (VERDICT r9 item 5): hash-provable Lloyd's k-means.
+# Hash-provable Lloyd's k-means.
 #
 # q_vec_kmeans stays the full MLlib capability (seeded, rows-only + purity
 # gate); this twin makes the ITERATIVE RECURRENCE itself driver-hashable —
@@ -616,20 +627,21 @@ def kmeans_lloyd(
     final (center_id, c, n_members) — n_members from the LAST assignment
     (0 for a cluster that went empty; its centroid carries forward).
 
-    Total on ragged input (round 11, ADVICE r10): members are counted once
+    Total on ragged input: members are counted once
     per ROW via a posexplode_outer dim-0 sentinel — not per dimension — so
     n_members is exact even when embeddings differ in length (empty and
     NULL embeddings count as members of their assigned cluster). Each
     dimension's mean averages the values PRESENT at that dimension; under
     the :func:`load_vectors` fixed-dimension contract this is the ordinary
     centroid. A row whose length mismatches a center's has NULL distance
-    to it (zip_with pads), and NULL sorts FIRST in the struct-min — so a
-    fully-ragged row deterministically assigns to the lowest center_id,
-    never silently drops (pinned by test_kmeans_lloyd_ragged_member_counts).
+    to it (zip_with pads), and :func:`nearest_center` ranks a NULL distance
+    after every real one — so a fully ragged row, NULL to every center,
+    deterministically goes to the lowest center_id and is never silently
+    dropped (pinned by test_kmeans_lloyd_ragged_member_counts).
 
     Scale shape (the PageRank iterative-join skeleton): per iteration the
-    corpus is scanned ONCE, assignment is a map-only broadcast of the
-    K-row center array (array_min struct fold — no exchange), and the only
+    corpus is scanned ONCE, assignment is :func:`nearest_center`'s
+    map-only broadcast of the K-row center array (no exchange), and the only
     shuffle is the (center_id, dim)-keyed centroid sum, which partial
     aggregation collapses to <= K*d rows per partition before the exchange.
     The K-row center table is lazily checkpointed per iteration: it is
@@ -639,21 +651,7 @@ def kmeans_lloyd(
     from .relational import dsum
 
     for it in range(iterations):
-        c_arr = centers.agg(F.collect_list(F.struct("center_id", "c")).alias("_cs"))
-        best = F.array_min(
-            F.transform(
-                "_cs",
-                lambda c0: F.struct(
-                    _l2sq("embedding", c0["c"]).alias("dist"),
-                    c0["center_id"].alias("center_id"),
-                ),
-            )
-        )
-        assign = (
-            vs.crossJoin(F.broadcast(c_arr))
-            .withColumn("_best", best)
-            .select(F.col("_best.center_id").alias("center_id"), "embedding")
-        )
+        assign = nearest_center(vs, centers, lambda c: _l2sq("embedding", c["c"])).select("center_id", "embedding")
         # posexplode_outer + dim-0 sentinel: an empty/NULL embedding emits
         # one (i=0, x=NULL) row, a d-dim one emits i=1..d — so counting the
         # i<=1 rows counts each member exactly once, in the SAME single
@@ -713,7 +711,7 @@ def lloyd_kmeans(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """User-parameterized Lloyd's k-means (VERDICT r10 item 4) — the public
+    """User-parameterized Lloyd's k-means — the public
     library entry next to ``pagerank()``/``label_propagation()``.
 
     Seeds deterministically from the ``k`` smallest ``id_col`` rows
@@ -729,7 +727,7 @@ def lloyd_kmeans(
     after is the map-only-broadcast-assignment / (center,dim)-keyed-dsum
     loop documented on :func:`kmeans_lloyd`.
     """
-    # fan_out (round 17): the assignment fold + posexplode + dsum partial
+    # fan_out: the assignment fold + posexplode + dsum partial
     # aggregation run in the corpus scan stage EVERY iteration — on the
     # single-row-group fixture scan that is one core for the whole loop.
     # The docstring's bit-identity across partition counts (dsum sums,
@@ -859,12 +857,11 @@ def fixture_lloyd_centers(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_lloyd_oracle(),
     category="vector",
     description=(
-        "Hash-provable Lloyd's k-means (VERDICT r9 item 5, delivered as a "
-        "fully-oracled query rather than the suggested boolean gate): "
+        "Hash-provable Lloyd's k-means, a fully-oracled query: "
         f"{LLOYD_ITERATIONS} fixed iterations from the {N_CENTERS} "
-        "deterministic seed points, squared-L2 assignment with the "
-        "(dist, center_id) struct-min tie-break (map-only broadcast fold, "
-        "no exchange), centroid updates from (center_id, dim)-keyed "
+        "deterministic seed points, squared-L2 assignment through the "
+        "shared nearest-center kernel (map-only broadcast fold, no "
+        "exchange), centroid updates from (center_id, dim)-keyed "
         "fixed-point dsum(6) sums (the ONLY per-iteration shuffle, "
         "partial-agg-bounded to K*d rows per partition), empty clusters "
         "carried forward per dimension. Emits every final centroid "

@@ -4,6 +4,8 @@ stopword anti-join broadcasts, partial aggregation exists for collect_set."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from hadoop_web_browsing_logs_spark.plans.registry import get_query
@@ -49,9 +51,16 @@ def test_inverted_index_has_partial_aggregation(spark):
     assert "Exchange hashpartitioning(term" in plan
 
 
-def test_nearest_center_is_broadcast_nested_loop(spark):
-    plan = _plan(spark, "q_vec_nearest_center")
-    assert "BroadcastNestedLoopJoin" in plan
+@pytest.mark.parametrize("name", ["q_vec_nearest_center", "q_sim_ivf_candidates", "q_sim_ivf_ann"])
+def test_nearest_center_is_broadcast_nested_loop(spark, name):
+    df = get_query(name).fn(spark, SF_DIR)
+    assert "BroadcastNestedLoopJoin" in df._jdf.queryExecution().executedPlan().toString()
+    if name == "q_sim_ivf_ann":
+        # the probe is the map-only kernel and the exact baseline runs once:
+        # the only windows left are the exact and the IVF top-k
+        formatted = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+        tree = formatted.split("\n\n")[0]
+        assert len(re.findall(r"\bWindow \(\d+\)", tree)) == 2, tree
 
 
 def test_cache_reuse_in_plan(spark):

@@ -96,6 +96,44 @@ def test_nearest_center_assignment_total(spark):
     assert all(-1e-9 <= r.dist <= 2.0 + 1e-9 for r in rows)  # cosine distance range (fp slack)
 
 
+@pytest.mark.parametrize("n", [1, 2])
+def test_nearest_center_zero_norm_center_sorts_last(spark, duck, n):
+    """A zero-norm center is at NULL cosine distance from every point. The
+    kernel must rank it after every real distance, as the oracle's
+    ``ORDER BY dist, center_id`` (NULLS LAST in DuckDB) does, instead of
+    handing it every point."""
+    from hadoop_web_browsing_logs_spark.functions.vector import duck_cosine_distance, norm
+    from hadoop_web_browsing_logs_spark.operators.vectors import cosine_dist, nearest_center
+    from hadoop_web_browsing_logs_spark.plans.oracle import oracle_mismatch
+
+    points = [(10, [1.0, 0.0]), (11, [0.0, 1.0]), (12, [1.0, 1.0])]
+    centers = [(0, [0.0, 0.0]), (1, [1.0, 0.1]), (2, [0.1, 1.0])]
+    p = spark.createDataFrame(points, "vec_id bigint, embedding array<double>")
+    c = spark.createDataFrame(centers, "center_id int, cvec array<double>")
+    got = nearest_center(
+        p.withColumn("_pn", norm("embedding")),
+        c.withColumn("_cn", norm("cvec")),
+        cosine_dist("embedding", "_pn"),
+        n,
+    ).select("vec_id", "center_id", "dist")
+
+    def values(rows, cast):
+        return ", ".join(f"(CAST({i} AS {cast}), CAST({v} AS DOUBLE[]))" for i, v in rows)
+
+    want = duck.execute(f"""
+        SELECT vec_id, center_id, dist FROM (
+            SELECT vec_id, center_id, dist,
+                   ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, center_id) AS rn
+            FROM (
+                SELECT e.vec_id, c.center_id, {duck_cosine_distance('e.embedding', 'c.cvec')} AS dist
+                FROM (VALUES {values(points, 'BIGINT')}) e(vec_id, embedding)
+                CROSS JOIN (VALUES {values(centers, 'INTEGER')}) c(center_id, cvec)
+            )
+        ) WHERE rn <= {n}""")
+    why = oracle_mismatch(got, want)
+    assert why is None, why
+
+
 def test_ivf_recall_reasonable(spark):
     rows = get_query("q_sim_ivf_ann").fn(spark, SF_DIR).collect()
     assert rows
