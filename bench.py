@@ -20,7 +20,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hadoop_web_browsing_logs_spark.plans.registry import all_queries
-from hadoop_web_browsing_logs_spark.session import get_spark, release_query_caches
+from hadoop_web_browsing_logs_spark.session import DEFAULT_CPUS, get_spark, release_query_caches
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 MEDIAN_OF = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
@@ -191,9 +191,11 @@ HEADLINE = [
 BASELINE_SET = HEADLINE[:21]
 
 
-def _load_trend(sf: str, per_query: dict[str, float]) -> dict[str, dict[str, float]]:
-    """Per-query median history: every committed same-SF ``BENCH_r*.json``
-    driver snapshot, plus this run under the ``"now"`` key."""
+def _load_trend(sf: str, cpus: int, per_query: dict[str, float]) -> dict[str, dict[str, float]]:
+    """Per-query median history: every committed ``BENCH_r*.json`` snapshot
+    taken at the same SF and core count (top-level ``cpus``), plus
+    this run under the ``"now"`` key. A snapshot from another core count
+    would read as a regression or a speed-up that the code never made."""
     import glob as _glob
     import re as _re
 
@@ -207,7 +209,7 @@ def _load_trend(sf: str, per_query: dict[str, float]) -> dict[str, dict[str, flo
             with open(path) as fh:
                 snap = json.load(fh)
             parsed = snap.get("parsed") or {}
-            if not parsed or str(snap.get("sf")) != sf:
+            if not parsed or str(snap.get("sf")) != sf or snap.get("cpus") != cpus:
                 continue
             queries = parsed.get("queries") or {}
             items = queries.items() if hasattr(queries, "items") else []
@@ -410,6 +412,7 @@ def main() -> None:
         "load_avg_1m": load_avg,
         "median_of": MEDIAN_OF,
         "sf": float(sf) if sf else None,
+        "cpus": DEFAULT_CPUS,
     }
     # Full detail (per-query minima + every raw sample) goes to a FILE, not
     # the stdout line: round 8's line grew past the driver's tail capture and
@@ -420,12 +423,12 @@ def main() -> None:
     detail["queries_min"] = per_query_min
     detail["samples"] = {n: [round(x, 3) for x in ts] for n, ts in samples.items()}
     # Trend block (VERDICT r10 item 8): per-query median history across the
-    # committed BENCH_r*.json driver snapshots (same-SF rows only), plus
+    # committed BENCH_r*.json snapshots (same-SF, same-cpus rows only), plus
     # this run — so a regression surfaces from BENCH_DETAIL alone instead
     # of hand-diffing ten snapshot files. Missing rounds (query not yet
     # registered / not sampled) are simply absent from that query's map.
     try:
-        trend = _load_trend(str(line["sf"]), per_query)
+        trend = _load_trend(str(line["sf"]), DEFAULT_CPUS, per_query)
         detail["trend"] = trend
         # Loud regression gate (VERDICT r11 item 3, tiered r13): flag every
         # query now >0.5 s that runs past its tier's gate vs its LAST

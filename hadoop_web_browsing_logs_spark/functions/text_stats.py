@@ -33,10 +33,13 @@ BPE_TOKEN_PATTERN = r"\w+|[^\w\s]"
 
 
 def ws_tokens(text: Column | str) -> Column:
-    """Whitespace tokenization of lowercased text → ARRAY<STRING>
-    (reference: ``StringTokenizer`` per line, ProcessData.java:390)."""
+    """Whitespace tokenization of lowercased text → ARRAY<STRING>, empty
+    tokens dropped (reference: ``StringTokenizer`` per line,
+    ProcessData.java:390). Empty or all-space text splits to ``[""]``, and
+    Spark's ``trim`` strips spaces only, so a leading or trailing tab or
+    newline leaves an empty end token: ``array_remove`` drops both."""
     c = F.col(text) if isinstance(text, str) else text
-    return F.split(F.trim(F.lower(c)), r"\s+")
+    return F.array_remove(F.split(F.trim(F.lower(c)), r"\s+"), "")
 
 
 def strip_punct(token: Column) -> Column:
@@ -45,8 +48,16 @@ def strip_punct(token: Column) -> Column:
     return F.regexp_replace(token, r"\p{P}", "")
 
 
-def token_count_ws(text: Column | str) -> Column:
-    return F.size(ws_tokens(text))
+#: DuckDB twin of :func:`ws_tokens`. It reads an unqualified ``text``
+#: column, so the FROM clause it runs in must have exactly one.
+DUCK_WS_TOKENS = "list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> '')"
+
+#: DuckDB twin of ``operators.text.tokenize``'s token list: ``ws_tokens``,
+#: then ``strip_punct`` per token, then empties dropped again.
+DUCK_TOKENS = (
+    f"list_filter(list_transform({DUCK_WS_TOKENS}, x -> regexp_replace(x, '\\pP', '', 'g')), "
+    "x -> x <> '')"
+)
 
 
 def token_count_bpe(text: Column | str) -> Column:
@@ -65,7 +76,7 @@ def distinct_token_count(tokens: Column) -> Column:
 def avg_token_len(tokens: Column) -> Column:
     """Mean token length; exact integer sum / count → deterministic double.
 
-    NULL for empty token arrays (round 6): DuckDB's ``list_sum([])`` is NULL
+    NULL for empty token arrays: DuckDB's ``list_sum([])`` is NULL
     and its divide-by-zero is NULL, while ANSI Spark throws on 0/0 —
     ``try_divide`` gives both engines the same answer on empty documents."""
     total = F.aggregate(F.transform(tokens, F.length), F.lit(0), lambda acc, x: acc + x)

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.text_stats import fingerprint_md5
+from ..functions.text_stats import DUCK_TOKENS, DUCK_WS_TOKENS, fingerprint_md5, ws_tokens
 from ..functions.vector import duck_cosine_similarity
 from ..plans.registry import query
 from ..session import SessionMemo
@@ -44,12 +44,7 @@ SIMHASH_BITS = 16
 
 
 def distinct_tokens(text_col: str = "text") -> Column:
-    return F.array_distinct(
-        F.filter(F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda x: x != "")
-    )
-
-
-_DUCK_TOKS = "list_distinct(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> ''))"
+    return F.array_distinct(ws_tokens(text_col))
 
 
 def _poly_hash(tok: Column) -> Column:
@@ -71,11 +66,11 @@ _DUCK_POLY = (
     "(acc, ch) -> (acc * 31 + ch) % 2147483647)"
 )
 
-# Spark-SQL-text twins of distinct_tokens()/_poly_hash(), used by the hot LSH
-# path (round 6): one parsed expression replaces dozens of py4j Column calls —
-# the SAME expression tree after parsing, so results are bit-identical to the
-# Column-API forms above (which remain the library surface for other callers).
-_TOKS_SQL = r"array_distinct(filter(split(trim(lower(text)), '\\s+'), x -> x != ''))"
+# Spark-SQL-text twin of _poly_hash(), used by the hot LSH path over a
+# distinct_tokens() column: one parsed expression replaces dozens of py4j
+# Column calls — the SAME expression tree after parsing, so results are
+# bit-identical to the Column-API form above (which remains the library
+# surface for other callers).
 _POLY_SQL = (
     "aggregate(filter(split(tok, ''), c -> c != ''), 0L, "
     f"(acc, ch) -> (acc * 31 + ascii(ch)) % {HASH_MOD})"
@@ -124,7 +119,7 @@ def dedup_exact(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     "q_dedup_jaccard_pairs",
     oracle=f"""
     WITH d0 AS (
-        SELECT doc_id, {_DUCK_TOKS} AS toks
+        SELECT doc_id, list_distinct({DUCK_WS_TOKENS}) AS toks
         FROM documents WHERE doc_id % {PAIR_STRIDE} = 0
     ),
     d AS (SELECT * FROM d0 WHERE len(toks) > 0)
@@ -402,7 +397,7 @@ def _jaccard_prefix_scored(docs: DataFrame, tau: float) -> DataFrame:
     "q_dedup_jaccard_prefix",
     oracle=f"""
     WITH d0 AS (
-        SELECT doc_id, {_DUCK_TOKS} AS toks
+        SELECT doc_id, list_distinct({DUCK_WS_TOKENS}) AS toks
         FROM documents WHERE doc_id % {PAIR_STRIDE} = 0
     ),
     d AS (SELECT * FROM d0 WHERE len(toks) > 0)
@@ -444,7 +439,7 @@ JACCARD_THRESHOLD_2 = 0.8
     "q_dedup_jaccard_prefix_t8",
     oracle=f"""
     WITH d0 AS (
-        SELECT doc_id, {_DUCK_TOKS} AS toks
+        SELECT doc_id, list_distinct({DUCK_WS_TOKENS}) AS toks
         FROM documents WHERE doc_id % {PAIR_STRIDE} = 0
     ),
     d AS (SELECT * FROM d0 WHERE len(toks) > 0)
@@ -488,7 +483,7 @@ JACCARD_THRESHOLD_3 = 0.7
     "q_dedup_jaccard_prefix_t7",
     oracle=f"""
     WITH d0 AS (
-        SELECT doc_id, {_DUCK_TOKS} AS toks
+        SELECT doc_id, list_distinct({DUCK_WS_TOKENS}) AS toks
         FROM documents WHERE doc_id % {PAIR_STRIDE} = 0
     ),
     d AS (SELECT * FROM d0 WHERE len(toks) > 0)
@@ -548,7 +543,7 @@ _DUCK_SH5 = (
     oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> '') AS tk
+               {DUCK_WS_TOKENS} AS tk
         FROM documents
     ),
     sh0 AS (SELECT doc_id, UNNEST({_DUCK_SH5}) AS s FROM toks),
@@ -822,23 +817,23 @@ def minhash_lsh_pairs(docs: DataFrame, portable: bool = False) -> DataFrame:
     # fan_out (round 17): the 64-permutation signature fold + tokenize run
     # in the corpus scan stage — one task on the single-row-group fixture
     # scan. Per-row folds, integer downstream: partition-independent.
-    docs = fan_out(docs)
     # token arrays hashed to int64 once per doc: the exact-Jaccard verify
     # then intersects INT arrays (cheap equality) instead of strings; a
     # cross-token hash collision (~n²/2^64) is the only way results could
     # differ from string-set Jaccard
-    # SQL-text expression build (round 6): fn() is re-invoked fresh on every
-    # bench pass and driver run, and the Column-API form of these wide
-    # expressions cost ~0.45 s of py4j round-trips per call (measured — the
-    # executors never saw any of it). One parse produces the identical tree.
+    # The hash folds are SQL text: fn() is re-invoked fresh on every bench
+    # pass and query run, and the Column-API form of these wide expressions
+    # cost ~0.45 s of py4j round-trips per call (measured — the executors
+    # never saw any of it). One parse produces the identical tree.
+    docs = fan_out(docs).select("doc_id", distinct_tokens().alias("stoks"))
     if portable:
         hashed = docs.select(
             "doc_id",
-            F.expr(f"array_distinct(transform({_TOKS_SQL}, tok -> {_POLY_SQL}))").alias("toks"),
+            F.expr(f"array_distinct(transform(stoks, tok -> {_POLY_SQL}))").alias("toks"),
         )
         d = hashed.select("doc_id", "toks", minhash_signature_from_hashes(F.col("toks")).alias("sig"))
     else:
-        d = docs.select("doc_id", F.expr(_TOKS_SQL).alias("stoks")).select(
+        d = docs.select(
             "doc_id",
             F.expr("array_distinct(transform(stoks, tok -> xxhash64(tok)))").alias("toks"),
             minhash_signature(F.col("stoks")).alias("sig"),
@@ -950,7 +945,7 @@ def _minhash_lsh_portable_oracle() -> str:
     return f"""
     WITH d0 AS (
         SELECT doc_id,
-               list_distinct(list_transform({_DUCK_TOKS}, tok -> {_DUCK_POLY})) AS hs
+               list_distinct(list_transform(list_distinct({DUCK_WS_TOKENS}), tok -> {_DUCK_POLY})) AS hs
         FROM documents WHERE doc_id % {PAIR_STRIDE} = 0
     ),
     d AS (SELECT * FROM d0 WHERE len(hs) > 0),
@@ -1065,7 +1060,7 @@ def q_dedup_minhash_lsh_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH tok_hashes AS (
         SELECT doc_id,
-               list_transform({_DUCK_TOKS},
+               list_transform(list_distinct({DUCK_WS_TOKENS}),
                               tok -> {_DUCK_POLY}) AS hashes
         FROM documents
         WHERE doc_id % {PAIR_STRIDE} = 0
@@ -1132,7 +1127,7 @@ HAMMING_MAX = 3  # pigeonhole: <= 3 flipped bits leave >= 1 of 4 bands intact
     oracle=f"""
     WITH tok_hashes AS (
         SELECT doc_id,
-               list_transform({_DUCK_TOKS},
+               list_transform(list_distinct({DUCK_WS_TOKENS}),
                               tok -> {_DUCK_POLY}) AS hashes
         FROM documents
         WHERE doc_id % {PAIR_STRIDE} = 0
@@ -1466,7 +1461,7 @@ def connected_components(
     # path stays log(diameter) joins.
     oracle=f"""
     WITH RECURSIVE d AS (
-        SELECT doc_id, {_DUCK_TOKS} AS toks
+        SELECT doc_id, list_distinct({DUCK_WS_TOKENS}) AS toks
         FROM documents WHERE doc_id % {PAIR_STRIDE} = 0
     ),
     pairs AS (
@@ -1520,7 +1515,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # engine differences.
     oracle=f"""
     WITH RECURSIVE d AS (
-        SELECT doc_id, {_DUCK_TOKS} AS toks
+        SELECT doc_id, list_distinct({DUCK_WS_TOKENS}) AS toks
         FROM documents WHERE doc_id % {PAIR_STRIDE} = 0
     ),
     pairs AS (
@@ -1608,7 +1603,7 @@ SUBSTR_WINDOW = 10  # tokens per rolling window
     oracle=f"""
     WITH d AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> '') AS toks
+               {DUCK_WS_TOKENS} AS toks
         FROM documents
     ),
     w AS (
@@ -1637,10 +1632,9 @@ SUBSTR_WINDOW = 10  # tokens per rolling window
 )
 def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = SUBSTR_WINDOW
-    toks = F.filter(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != "")
     d = (
         t(spark, sf_dir, "documents")
-        .select("doc_id", toks.alias("toks"))
+        .select("doc_id", ws_tokens("text").alias("toks"))
         .filter(F.size("toks") >= w)
     )
     wins = F.transform(
@@ -1684,10 +1678,10 @@ def minhash_lsh_pairs_incremental(
     rows_per_band = MINHASH_PERMS // MINHASH_BANDS
 
     def prep(docs: DataFrame, is_new: bool) -> DataFrame:
-        hashed = docs.select(
+        hashed = docs.select("doc_id", distinct_tokens().alias("stoks")).select(
             "doc_id",
             F.lit(is_new).alias("is_new"),
-            F.expr(f"array_distinct(transform({_TOKS_SQL}, tok -> {_POLY_SQL}))").alias("toks"),
+            F.expr(f"array_distinct(transform(stoks, tok -> {_POLY_SQL}))").alias("toks"),
         )
         return (
             hashed.select(
@@ -1767,7 +1761,7 @@ def _incremental_lsh_oracle() -> str:
     return f"""
     WITH d0 AS (
         SELECT doc_id, (doc_id % 4 = 1) AS is_new,
-               list_distinct(list_transform({_DUCK_TOKS}, tok -> {_DUCK_POLY})) AS hs
+               list_distinct(list_transform(list_distinct({DUCK_WS_TOKENS}), tok -> {_DUCK_POLY})) AS hs
         FROM documents WHERE doc_id % {PAIR_STRIDE} = 0
     ),
     d AS (SELECT * FROM d0 WHERE len(hs) > 0),
@@ -1866,10 +1860,8 @@ _FUZZY_ORACLE = f"""
     WITH v AS (
         SELECT DISTINCT u.token AS term
         FROM documents d,
-             UNNEST(list_transform(string_split_regex(lower(trim(d.text)), '\\s+'),
-                                   x -> regexp_replace(x, '\\pP', '', 'g'))) AS u(token)
-        WHERE u.token <> ''
-          AND regexp_matches(u.token, '{FUZZY_TERM_RE}')
+             UNNEST({DUCK_TOKENS}) AS u(token)
+        WHERE regexp_matches(u.token, '{FUZZY_TERM_RE}')
           AND length(u.token) BETWEEN {FUZZY_MIN_LEN} AND {FUZZY_MAX_LEN}
     )
     SELECT a.term AS term_a, b.term AS term_b,

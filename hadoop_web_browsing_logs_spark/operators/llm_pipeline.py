@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..functions.text_stats import DUCK_WS_TOKENS, ws_tokens
 from ..plans.registry import query
 from ._util import fan_out, t
 from .dedup import JACCARD_THRESHOLD, PAIR_STRIDE
@@ -25,14 +26,12 @@ CHUNK_STRIDE = 15  # 5-token overlap
 #: per-language keep-rate (percent) for the stratified mix
 MIX_RATES = {"en": 80, "de": 40, "fr": 40, "es": 40, "zh": 20}
 
-_TOKS = "list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> '')"
-
 
 def _hash_bucket(col, buckets: int = 100):
     """Deterministic [0, buckets) bucket from the MD5 hex prefix — the
     engine-portable substitute for rand(seed).
 
-    NULL-total (round 7): a NULL document hashes as the empty string, so the
+    NULL-total: a NULL document hashes as the empty string, so the
     bucket — and therefore the split/mix decision — is defined and identical
     in both engines (Spark's md5(NULL)→NULL routed NULL-text docs to the
     CASE fallback while DuckDB's list_prepend(0, NULL)→[0] sent them to
@@ -59,7 +58,7 @@ def _duck_hash_bucket(expr: str, buckets: int = 100) -> str:
     "q_llm_chunk",
     oracle=f"""
     WITH d0 AS (
-        SELECT doc_id, {_TOKS} AS toks FROM documents WHERE doc_id % 10 = 0
+        SELECT doc_id, {DUCK_WS_TOKENS} AS toks FROM documents WHERE doc_id % 10 = 0
     ),
     d AS (SELECT * FROM d0 WHERE len(toks) > 0)
     SELECT doc_id, chunk_idx,
@@ -73,11 +72,10 @@ def _duck_hash_bucket(expr: str, buckets: int = 100) -> str:
 )
 def q_llm_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    toks = F.filter(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != "")
-    # an empty document has nothing to chunk (round 6): without the guard
+    # an empty document has nothing to chunk: without the guard
     # both engines emitted a phantom 0-token chunk whose text rendered ''
     # on Spark but NULL on DuckDB — excluded identically on both sides
-    d = docs.select("doc_id", toks.alias("toks")).filter(F.size("toks") > 0)
+    d = docs.select("doc_id", ws_tokens("text").alias("toks")).filter(F.size("toks") > 0)
     n_chunks = F.greatest(
         (F.ceil((F.size("toks") - CHUNK_TOKENS) / float(CHUNK_STRIDE))).cast("int") + 1, F.lit(1)
     )
@@ -151,7 +149,7 @@ def q_llm_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_llm_token_budget",
     oracle=f"""
     WITH sized AS (
-        SELECT source, doc_id, len({_TOKS}) AS n_tokens FROM documents
+        SELECT source, doc_id, len({DUCK_WS_TOKENS}) AS n_tokens FROM documents
     ),
     running AS (
         SELECT source, doc_id, n_tokens,
@@ -170,13 +168,12 @@ def q_llm_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_llm_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != "")
-    sized = docs.select("source", "doc_id", F.size(toks).alias("n_tokens"))
+    sized = docs.select("source", "doc_id", F.size(ws_tokens("text")).alias("n_tokens"))
     w = W.partitionBy("source").orderBy("doc_id").rowsBetween(W.unboundedPreceding, W.currentRow)
     running = sized.withColumn("cum_tokens", F.sum("n_tokens").over(w))
     # Both output columns explicitly BIGINT: DuckDB's FILTER-count and the MAX
     # over a HUGEINT-widened window sum would otherwise skew representation
-    # against Spark's LONG (round-1 driver hash-FAIL, VERDICT.md).
+    # against Spark's LONG and fail the type-sensitive oracle comparison.
     return running.groupBy("source").agg(
         F.count(F.when(F.col("cum_tokens") <= 2000, 1)).cast("bigint").alias("docs_in_budget"),
         F.max(F.when(F.col("cum_tokens") <= 2000, F.col("cum_tokens"))).cast("bigint").alias("tokens_used"),
@@ -245,7 +242,7 @@ def q_llm_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(list_sum(list_transform(toks, x -> length(x))) AS DOUBLE) / len(toks) AS mean_wlen,
                CAST(list_max(list_transform(list_distinct(toks),
                     u -> len(list_filter(toks, x -> x = u)))) AS DOUBLE) / len(toks) AS rep_ratio
-        FROM (SELECT lang, {_TOKS} AS toks FROM documents)
+        FROM (SELECT lang, {DUCK_WS_TOKENS} AS toks FROM documents)
     )
     GROUP BY lang
     """,
@@ -254,7 +251,6 @@ def q_llm_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_llm_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != "")
     n_tok = F.size("toks")
     # try_divide: empty docs yield NULL ratios on both engines (DuckDB's
     # list_sum([])/list_max([]) are NULL and its divide-by-zero is NULL;
@@ -274,7 +270,7 @@ def q_llm_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("double"),
         n_tok,
     )
-    d = docs.select("lang", toks.alias("toks")).select(
+    d = docs.select("lang", ws_tokens("text").alias("toks")).select(
         "lang", n_tok.alias("n_tok"), mean_wlen.alias("mean_wlen"), rep.alias("rep_ratio")
     )
     pass_len = (F.col("n_tok") >= 10) & (F.col("n_tok") <= 5000)
@@ -292,7 +288,7 @@ def q_llm_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_llm_decontaminate",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    WITH toks AS (SELECT doc_id, {DUCK_WS_TOKENS} AS toks FROM documents),
     shingles AS (
         SELECT doc_id, toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
                         || ' ' || toks[i+3] || ' ' || toks[i+4] AS sh
@@ -312,7 +308,7 @@ def q_llm_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Benchmark decontamination: 5-gram shingle overlap between the "
         "corpus and a held-out 'benchmark' subset — contaminated docs "
         "flagged via a shingle equi-join (hinted broadcast only when the "
-        "caller bounds the benchmark size). Round 12: shingles cross the "
+        "caller bounds the benchmark size). Shingles cross the "
         "join as xxhash64 fingerprints; the oracle keeps real strings, so "
         "the hash gate proves the fingerprint rewrite exact on the data."
     ),
@@ -348,7 +344,7 @@ def decontaminate(
     shuffle-joins beyond, which is the safe default when the benchmark set's
     cardinality is unknown or corpus-derived.
 
-    Round 12: shingles cross the contamination join / distinct /
+    Shingles cross the contamination join / distinct /
     countDistinct as 8-byte xxhash64 fingerprints, not strings — the
     q_text_novelty move; raw 5-grams exist only map-side. Exact modulo
     hash collisions (~n²/2⁶⁵), which the string-keyed DuckDB oracle would
@@ -370,8 +366,7 @@ def shingles_5gram_positioned(docs: DataFrame) -> DataFrame:
     """(doc_id, pos, sh) rows: like :func:`shingles_5gram` but each shingle
     carries its 1-based token position, so consumers can reason about RUNS of
     consecutive contaminated shingles, not just their count."""
-    toks = F.filter(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != "")
-    d = docs.select("doc_id", toks.alias("toks")).filter(F.size("toks") >= 5)
+    d = docs.select("doc_id", ws_tokens("text").alias("toks")).filter(F.size("toks") >= 5)
     sh = F.transform(
         F.sequence(F.lit(1), F.size("toks") - 4),
         lambda i: F.concat_ws(" ", *[F.element_at("toks", i + j) for j in range(5)]),
@@ -429,7 +424,7 @@ def contamination_spans(
 @query(
     "q_llm_contamination_span",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    WITH toks AS (SELECT doc_id, {DUCK_WS_TOKENS} AS toks FROM documents),
     shingles AS (
         SELECT doc_id, CAST(i AS BIGINT) AS pos,
                toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
@@ -472,7 +467,7 @@ def contamination_spans(
     tags=("llm", "decontamination"),
 )
 def q_llm_contamination_span(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fan_out (round 17): the shingle fingerprint build on both split legs
+    # fan_out: the shingle fingerprint build on both split legs
     # runs pre-exchange — one task on the single-row-group fixture scan
     # (the two legs share the spread scan; AQE reuses the exchange).
     docs = fan_out(t(spark, sf_dir, "documents"))
@@ -496,7 +491,7 @@ DOMAIN_CAP = 10  # max docs kept per source domain
     "q_llm_pack_sequences",
     oracle=f"""
     WITH d AS (
-        SELECT doc_id, CAST(len({_TOKS}) AS BIGINT) AS n_tokens FROM documents
+        SELECT doc_id, CAST(len({DUCK_WS_TOKENS}) AS BIGINT) AS n_tokens FROM documents
     ),
     c AS (
         SELECT doc_id, n_tokens,
@@ -525,12 +520,11 @@ DOMAIN_CAP = 10  # max docs kept per source domain
 def q_llm_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .relational import with_global_cumsum
 
-    toks = F.filter(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != "")
-    # fan_out measured and REJECTED here (round 17): size(tokens) is too
+    # fan_out measured and REJECTED here: size(tokens) is too
     # light a map stage to pay an extra exchange ahead of the cumsum's own
     # range repartition (bench 0.54 -> 0.64 s against the ambient tailwind).
     d = t(spark, sf_dir, "documents").select(
-        "doc_id", F.size(toks).cast("bigint").alias("n_tokens")
+        "doc_id", F.size(ws_tokens("text")).cast("bigint").alias("n_tokens")
     )
     c = with_global_cumsum(d, [F.col("doc_id")], "n_tokens", out_col="cum")
     off = F.col("cum") - F.col("n_tokens")
@@ -559,7 +553,7 @@ def q_llm_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Per-domain document caps (source-mixing control): keep at most "
         "DOMAIN_CAP docs per source, selected by MD5-fingerprint order — a "
         "deterministic uniform draw with no RNG, reproducible across "
-        "clusters. NULL text hashes as '' (round 8: a bare md5(text) put "
+        "clusters. NULL text hashes as '' (a bare md5(text) put "
         "NULL-text docs NULLS-FIRST in Spark but NULLS-LAST in DuckDB — "
         "latent until a source exceeded the cap WITH a NULL-text doc, "
         "exposed by the extended poison fixture). Partitioned window, "
@@ -591,7 +585,7 @@ DUP3_MAX = 0.05  # same for 3-grams
 
 def _ngram_run_stats(col: str | F.Column) -> F.Column:
     """STRUCT(maxc, dup): the max per-distinct-n-gram count and the sum of
-    counts >= 2, via ONE pass over the SORTED n-gram array (round 16, guide
+    counts >= 2, via ONE pass over the SORTED n-gram array (guide
     §1.2 'per-task work': the previous array_distinct + filter-scan form was
     O(distinct × n) string comparisons per document — quadratic on
     boilerplate-heavy docs and evaluated twice for g2 (top2 + dup2). Run
@@ -632,7 +626,7 @@ def _ngram_run_stats(col: str | F.Column) -> F.Column:
     "q_llm_repetition_rules",
     oracle=f"""
     WITH d AS (
-        SELECT lang, {_TOKS} AS toks FROM documents
+        SELECT lang, {DUCK_WS_TOKENS} AS toks FROM documents
     ),
     g AS (
         SELECT lang, len(toks) AS n_tok,
@@ -677,14 +671,13 @@ def _ngram_run_stats(col: str | F.Column) -> F.Column:
     ),
 )
 def q_llm_repetition_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = F.filter(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != "")
-    # fan_out (round 17): the tokenize + n-gram builds + the O(n log n)
+    # fan_out: the tokenize + n-gram builds + the O(n log n)
     # run-length fold all run BEFORE the lang groupBy's exchange — i.e.
     # inside the single-row-group fixture scan's one task. Per-row work;
     # the lang rollup is integer sums: partition-independent.
     d = (
         fan_out(t(spark, sf_dir, "documents"))
-        .select("lang", toks.alias("toks"))
+        .select("lang", ws_tokens("text").alias("toks"))
         .filter(F.size("toks") >= 3)
     )
 
@@ -730,7 +723,7 @@ def q_llm_repetition_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE d AS (
         SELECT doc_id,
-               list_distinct(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> '')) AS toks
+               list_distinct({DUCK_WS_TOKENS}) AS toks
         FROM documents WHERE doc_id % {PAIR_STRIDE} = 0
     ),
     pairs AS (
@@ -774,7 +767,7 @@ def q_llm_repetition_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q_llm_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # round 16: prefix-join pair source (row-identical to the quadratic
+    # prefix-join pair source (row-identical to the quadratic
     # baseline by the prefix-filter theorem, candidate-linear) — see
     # q_dedup_components
     from .dedup import connected_components, q_dedup_jaccard_prefix
@@ -794,7 +787,7 @@ def q_llm_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Corpus-LM quality scoring (round 8): the CCNet-style perplexity filter,
+# Corpus-LM quality scoring: the CCNet-style perplexity filter,
 # re-expressed with the corpus's OWN unigram LM so it stays declarative and
 # oracle-checkable (the production variant swaps in a pretrained LM's token
 # log-probs via a broadcast vocabulary table — same plan shape).
@@ -806,7 +799,7 @@ def q_llm_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH tok AS (
         SELECT d.doc_id, u.token AS term
-        FROM documents d, UNNEST({_TOKS}) AS u(token)
+        FROM documents d, UNNEST({DUCK_WS_TOKENS}) AS u(token)
     ),
     ctf AS (SELECT term, COUNT(*) AS ctf FROM tok GROUP BY term),
     tot AS (SELECT COUNT(*) AS total FROM tok),
@@ -844,10 +837,7 @@ def q_llm_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_llm_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != ""
-    )
-    tok = docs.select("doc_id", F.explode(toks).alias("term"))
+    tok = docs.select("doc_id", F.explode(ws_tokens("text")).alias("term"))
     ctf = tok.groupBy("term").agg(F.count(F.lit(1)).alias("ctf"))
     total = tok.agg(F.count(F.lit(1)).alias("total"))
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
@@ -879,7 +869,7 @@ SHARD_TOKENS = 1024  # 8 training sequences of SEQ_LEN per output shard
     "q_llm_shard_manifest",
     oracle=f"""
     WITH d AS (
-        SELECT doc_id, CAST(len({_TOKS}) AS BIGINT) AS n_tokens FROM documents
+        SELECT doc_id, CAST(len({DUCK_WS_TOKENS}) AS BIGINT) AS n_tokens FROM documents
     ),
     c AS (
         SELECT doc_id, n_tokens,
@@ -929,7 +919,7 @@ def q_llm_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_llm_bigram_logprob",
     oracle=f"""
     WITH d AS (
-        SELECT doc_id, {_TOKS} AS toks FROM documents
+        SELECT doc_id, {DUCK_WS_TOKENS} AS toks FROM documents
     ),
     big AS (
         SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2
@@ -962,22 +952,19 @@ def q_llm_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "positional lambda — no shuffle, no Python); per-bigram "
         "contributions accumulate as rounded micro-nat BIGINTs (the dsum "
         "discipline) so the sum is order-independent across partitionings "
-        "and engines. Scale shape (round 17): bigram and context counts "
+        "and engines. Scale shape: bigram and context counts "
         "ride ONE w1-keyed exchange as window sums over the per-doc "
         "counts — no bigram-table join, no cached intermediates; docs "
         "with < 2 tokens keep a row with n_bigrams=0 and NULL score."
     ),
 )
 def q_llm_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fan_out (round 17): the tokenize + bigram-struct explode run before
+    # fan_out: the tokenize + bigram-struct explode run before
     # the w1 repartition — inside the single-row-group fixture scan's one
     # task. Per-row expansion; all counts are integers downstream.
     docs = fan_out(t(spark, sf_dir, "documents"))
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != ""
-    )
     big = (
-        docs.select("doc_id", toks.alias("toks"))
+        docs.select("doc_id", ws_tokens("text").alias("toks"))
         .select(
             "doc_id",
             F.explode(
@@ -989,8 +976,8 @@ def q_llm_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "bg.w1", "bg.w2")
     )
-    # WINDOW-SUM form (round 17, guide §2.4 "remove shuffles outright").
-    # The round-16 shape pinned bf and cbf with .cache() and joined three
+    # WINDOW-SUM form (guide §2.4 "remove shuffles outright").
+    # The earlier shape pinned bf and cbf with .cache() and joined three
     # count levels back together — and CacheManager's plan-matching made
     # those caches hit ACROSS bench passes (the "Asked to cache already
     # cached data" warnings), so the committed 0.78 s bench median was
@@ -1051,7 +1038,7 @@ _DUCK_HEX8 = (
     oracle=f"""
     WITH d AS (
         SELECT source, doc_id,
-               CAST(len({_TOKS}) AS BIGINT) AS n_tokens,
+               CAST(len({DUCK_WS_TOKENS}) AS BIGINT) AS n_tokens,
                {_DUCK_HEX8} AS h
         FROM documents
     ),
@@ -1086,16 +1073,13 @@ _DUCK_HEX8 = (
     ),
 )
 def q_llm_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != ""
-    )
     h = F.conv(F.substring(F.md5(F.coalesce(F.col("text"), F.lit(""))), 1, 8), 16, 10).cast(
         "bigint"
     )
     d = t(spark, sf_dir, "documents").select(
         "source",
         "doc_id",
-        F.size(toks).cast("bigint").alias("n_tokens"),
+        F.size(ws_tokens("text")).cast("bigint").alias("n_tokens"),
         h.alias("h"),
     )
     # association mirrors the oracle: ln(u) / w * 1e6, left-to-right
@@ -1114,7 +1098,7 @@ def q_llm_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# BPE tokenizer training (round 8): the classic iterative pair-merge loop,
+# BPE tokenizer training: the classic iterative pair-merge loop,
 # run — as every production BPE trainer does — on the WORD-FREQUENCY DICT,
 # not the raw corpus: one corpus scan builds the dict, then every iteration
 # touches only the vocabulary-sized table (the model, not the data), so the
@@ -1134,11 +1118,8 @@ _PAIR_EXPR = (
 def bpe_word_dict(docs: DataFrame) -> DataFrame:
     """One corpus scan: whitespace words -> (syms, freq) dict, each word as
     its character sequence plus the ``</w>`` end marker."""
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != ""
-    )
     return (
-        docs.select(F.explode(toks).alias("word"))
+        docs.select(F.explode(ws_tokens("text")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
         .select(
@@ -1174,7 +1155,7 @@ def _merge_fold_sql(left: str, right: str) -> str:
 
     # escape backslashes BEFORE quotes: a symbol containing `\` (or ending
     # in one) would otherwise eat the closing quote and misparse the fold
-    # SQL (ADVICE r8) — real-world corpora contain backslash tokens
+    # SQL — real-world corpora contain backslash tokens
     def esc(s: str) -> str:
         return s.replace("\\", "\\\\").replace("'", "\\'")
 
@@ -1219,7 +1200,7 @@ def bpe_train(word_dict: DataFrame, n_merges: int) -> list[tuple]:
     oracle=f"""
     WITH w AS (
         SELECT u.token AS word, COUNT(*) AS freq
-        FROM documents d, UNNEST({_TOKS}) AS u(token)
+        FROM documents d, UNNEST({DUCK_WS_TOKENS}) AS u(token)
         GROUP BY u.token
     ),
     s AS (
@@ -1303,8 +1284,8 @@ _BPE_SCHEMA = "rank int, left_sym string, right_sym string, merged string, cnt b
     oracle="SELECT TRUE AS ok",
     category="llm",
     description=(
-        "Driver gate for the full iterative BPE trainer (VERDICT r8 item "
-        "8): runs bpe_train end-to-end — argmax-and-fold loop, greedy "
+        "Gate for the full iterative BPE trainer: runs bpe_train "
+        "end-to-end — argmax-and-fold loop, greedy "
         "left-to-right merge application, lineage-truncating checkpoints — "
         "on the canonical textbook corpus it carries (sf-independent, like "
         "the Porter gate) and emits ok = the ENTIRE learned merge sequence "
@@ -1340,7 +1321,7 @@ QUALITY_KEEP_FRAC = 0.5  # keep the top half of each source by LM score
     oracle=f"""
     WITH tok AS (
         SELECT d.doc_id, u.token AS term
-        FROM documents d, UNNEST({_TOKS}) AS u(token)
+        FROM documents d, UNNEST({DUCK_WS_TOKENS}) AS u(token)
     ),
     ctf AS (SELECT term, COUNT(*) AS ctf FROM tok GROUP BY term),
     tot AS (SELECT COUNT(*) AS total FROM tok),
@@ -1395,7 +1376,7 @@ def q_llm_quality_filter_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# BPE encoding (round 9): APPLY a fixed merge table to a corpus — the
+# BPE encoding: APPLY a fixed merge table to a corpus — the
 # production half of the tokenizer story (training produces the artifact;
 # every data pipeline then encodes with it).
 # ---------------------------------------------------------------------------
@@ -1524,7 +1505,7 @@ def q_llm_bpe_encode_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH d AS (
         SELECT source,
                md5(lower(trim(text))) AS fp,
-               len({_TOKS}) AS n_tok
+               len({DUCK_WS_TOKENS}) AS n_tok
         FROM documents
     ),
     q AS (SELECT * FROM d WHERE n_tok BETWEEN 10 AND 5000),
@@ -1562,9 +1543,8 @@ def q_llm_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text_stats import fingerprint_md5
 
     docs = t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != "")
     d = docs.select(
-        "source", fingerprint_md5("text").alias("fp"), F.size(toks).alias("n_tok")
+        "source", fingerprint_md5("text").alias("fp"), F.size(ws_tokens("text")).alias("n_tok")
     ).localCheckpoint(eager=False)
     q = d.filter((F.col("n_tok") >= 10) & (F.col("n_tok") <= 5000))
     u = q.groupBy("source", "fp").agg(F.min("n_tok").alias("n_tok"))
@@ -1601,7 +1581,7 @@ MIX_ALPHA = 0.5
     "q_llm_temperature_mix",
     oracle=f"""
     WITH sized AS (
-        SELECT source, CAST(SUM(len({_TOKS})) AS BIGINT) AS n_tokens
+        SELECT source, CAST(SUM(len({DUCK_WS_TOKENS})) AS BIGINT) AS n_tokens
         FROM documents GROUP BY source
     ),
     w AS (SELECT source, n_tokens, POWER(n_tokens, 0.5) AS w_raw FROM sized),
@@ -1628,9 +1608,8 @@ MIX_ALPHA = 0.5
 )
 def q_llm_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != "")
     sized = docs.groupBy("source").agg(
-        F.sum(F.size(toks)).cast("bigint").alias("n_tokens")
+        F.sum(F.size(ws_tokens("text"))).cast("bigint").alias("n_tokens")
     )
     w = sized.withColumn("w_raw", F.pow("n_tokens", F.lit(0.5)))
     tot = w.agg(
@@ -1639,7 +1618,7 @@ def q_llm_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
             / 1000000
         ).alias("denom")
     )
-    # try_divide, not `/` (ADVICE r9): on a degenerate all-empty corpus every
+    # try_divide, not `/`: on a degenerate all-empty corpus every
     # w_raw is 0 and the quantized denom is exactly 0 — ANSI Spark would throw
     # DIVIDE_BY_ZERO where DuckDB's plain division yields NULL. try_divide is
     # DuckDB's exact semantics and bit-identical for non-zero denominators

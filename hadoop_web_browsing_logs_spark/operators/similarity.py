@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..functions.text_stats import DUCK_TOKENS
 from ..functions.vector import (
     cosine_similarity,
     dot,
@@ -708,8 +709,7 @@ def _hybrid_rrf_oracle(
     return f"""
     WITH tok AS (
         SELECT d.doc_id, u.token AS term
-        FROM documents d, UNNEST(list_transform(string_split_regex(lower(trim(d.text)), '\\s+'), x -> regexp_replace(x, '\\pP', '', 'g'))) AS u(token)
-        WHERE u.token <> ''
+        FROM documents d, UNNEST({DUCK_TOKENS}) AS u(token)
     ),
     dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
     n AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs FROM documents),

@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 
 from ..functions.porter import stem_udf
 from ..functions.text_stats import (
+    DUCK_TOKENS,
+    DUCK_WS_TOKENS,
     LANG_MARKERS,
     STOPWORDS,
     avg_token_len,
@@ -38,6 +40,7 @@ from ..functions.text_stats import (
     lang_scores,
     quality_score,
     stopword_count,
+    strip_punct,
     token_count_bpe,
     ws_tokens,
 )
@@ -56,7 +59,7 @@ def tokenize(docs: DataFrame, text_col: str = "text", doc_col: str = "doc_id") -
     """Corpus → one row per (doc_id, token): lowercase, whitespace-split,
     punctuation-stripped, empties dropped (A4+A5).
 
-    fan_out (round 17): the split + regexp punctuation strip — the text
+    fan_out: the split + regexp punctuation strip — the text
     family's heaviest per-row stage — ran inside the single-row-group
     fixture scan's ONE task for every consumer (inverted index, tfidf,
     bm25, ref pipeline, …). Tokenization is per-row, so spreading the raw
@@ -64,7 +67,7 @@ def tokenize(docs: DataFrame, text_col: str = "text", doc_col: str = "doc_id") -
     Callers pass raw scans (or tiny local test frames) by contract."""
     return (
         fan_out(docs).select(doc_col, F.explode(ws_tokens(text_col)).alias("token"))
-        .withColumn("token", F.regexp_replace("token", r"\p{P}", ""))
+        .withColumn("token", strip_punct(F.col("token")))
         .filter(F.col("token") != "")
     )
 
@@ -159,7 +162,7 @@ def cluster_terms(index: DataFrame, centers: DataFrame) -> DataFrame:
 
 @query(
     "q_text_token_stats",
-    oracle="""
+    oracle=f"""
     SELECT lang,
            COUNT(DISTINCT doc_id)   AS n_docs,
            COUNT(*)                 AS n_tokens,
@@ -168,8 +171,7 @@ def cluster_terms(index: DataFrame, centers: DataFrame) -> DataFrame:
            MAX(token)               AS last_token
     FROM (
         SELECT d.lang, d.doc_id, u.token
-        FROM documents d, UNNEST(list_transform(string_split_regex(lower(trim(d.text)), '\\s+'), x -> regexp_replace(x, '\\pP', '', 'g'))) AS u(token)
-        WHERE u.token <> ''
+        FROM documents d, UNNEST({DUCK_TOKENS}) AS u(token)
     )
     GROUP BY lang
     """,
@@ -191,15 +193,14 @@ def q_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_term_doc_freq",
-    oracle="""
+    oracle=f"""
     SELECT * FROM (
         SELECT token AS term,
                COUNT(DISTINCT doc_id) AS df,
                COUNT(*) AS tf_total,
                ROW_NUMBER() OVER (ORDER BY COUNT(DISTINCT doc_id) DESC, token) AS rnk
         FROM (SELECT d.doc_id, u.token
-              FROM documents d, UNNEST(list_transform(string_split_regex(lower(trim(d.text)), '\\s+'), x -> regexp_replace(x, '\\pP', '', 'g'))) AS u(token)
-              WHERE u.token <> '')
+              FROM documents d, UNNEST({DUCK_TOKENS}) AS u(token))
         GROUP BY token
     ) WHERE rnk <= 20
     """,
@@ -226,8 +227,7 @@ def q_text_term_doc_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT token AS term, COUNT(*) AS n
     FROM (SELECT u.token
-          FROM documents d, UNNEST(list_transform(string_split_regex(lower(trim(d.text)), '\\s+'), x -> regexp_replace(x, '\\pP', '', 'g'))) AS u(token)
-          WHERE u.token <> '')
+          FROM documents d, UNNEST({DUCK_TOKENS}) AS u(token))
     WHERE token NOT IN ({_SW_SQL})
     GROUP BY token
     """,
@@ -246,8 +246,7 @@ def q_text_stopword_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(DISTINCT doc_id) AS df,
            array_to_string(list_sort(list(DISTINCT doc_id)), ',') AS postings
     FROM (SELECT d.doc_id, u.token
-          FROM documents d, UNNEST(list_transform(string_split_regex(lower(trim(d.text)), '\\s+'), x -> regexp_replace(x, '\\pP', '', 'g'))) AS u(token)
-          WHERE u.token <> '')
+          FROM documents d, UNNEST({DUCK_TOKENS}) AS u(token))
     WHERE token NOT IN ({_SW_SQL})
     GROUP BY token
     """,
@@ -317,11 +316,10 @@ def q_text_porter_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_tfidf",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
         SELECT d.doc_id, u.token AS term
-        FROM documents d, UNNEST(list_transform(string_split_regex(lower(trim(d.text)), '\\s+'), x -> regexp_replace(x, '\\pP', '', 'g'))) AS u(token)
-        WHERE u.token <> ''
+        FROM documents d, UNNEST({DUCK_TOKENS}) AS u(token)
     ),
     tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY doc_id, term),
     df AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY term),
@@ -381,7 +379,7 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
             + CAST(len(list_filter(toks, x -> x IN ({_SW_SQL}))) AS DOUBLE) / len(toks) * 0.4)
            * (CASE WHEN len(toks) < 5 OR len(toks) > 10000 THEN 0.5 ELSE 1.0 END) AS quality
     FROM (SELECT doc_id, n_chars,
-                 list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> '') AS toks
+                 {DUCK_WS_TOKENS} AS toks
           FROM documents)
     """,
     category="text",
@@ -389,8 +387,7 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
-    toks = F.filter(ws_tokens("text"), lambda x: x != "")
-    d = docs.select("doc_id", "n_chars", toks.alias("toks"))
+    d = docs.select("doc_id", "n_chars", ws_tokens("text").alias("toks"))
     return d.select(
         "doc_id",
         "n_chars",
@@ -418,7 +415,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )}
            END AS lang_guess
     FROM (SELECT doc_id, lang,
-                 list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> '') AS toks
+                 {DUCK_WS_TOKENS} AS toks
           FROM documents)
     """,
     category="text",
@@ -426,8 +423,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
-    toks = F.filter(ws_tokens("text"), lambda x: x != "")
-    d = docs.select("doc_id", F.col("lang").alias("labeled_lang"), toks.alias("toks"))
+    d = docs.select("doc_id", F.col("lang").alias("labeled_lang"), ws_tokens("text").alias("toks"))
     scores = lang_scores(F.col("toks"))
     best = F.greatest(*scores.values())
     guess = F.when(best == 0, "und")
@@ -443,12 +439,12 @@ def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_fingerprint",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            md5(lower(trim(text)))                                  AS fp,
            length(text)                                            AS text_len,
            len(regexp_extract_all(text, '\\w+|[^\\w\\s]'))         AS bpe_tokens,
-           len(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> '')) AS ws_tokens
+           len({DUCK_WS_TOKENS}) AS ws_tokens
     FROM documents
     WHERE doc_id % 10 = 0
     """,
@@ -462,7 +458,7 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         fingerprint_md5("text").alias("fp"),
         F.length("text").alias("text_len"),
         token_count_bpe("text").alias("bpe_tokens"),
-        F.size(F.filter(ws_tokens("text"), lambda x: x != "")).alias("ws_tokens"),
+        F.size(ws_tokens("text")).alias("ws_tokens"),
     )
 
 
@@ -489,8 +485,8 @@ def q_ref_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH tok AS (
         SELECT d.doc_id, u.token AS term
-        FROM documents d, UNNEST(list_transform(string_split_regex(lower(trim(d.text)), '\\s+'), x -> regexp_replace(x, '\\pP', '', 'g'))) AS u(token)
-        WHERE u.token <> '' AND u.token NOT IN ({_SW_SQL})
+        FROM documents d, UNNEST({DUCK_TOKENS}) AS u(token)
+        WHERE u.token NOT IN ({_SW_SQL})
     ),
     idx AS (
         SELECT term, list_sort(list(DISTINCT doc_id)) AS postings
@@ -548,14 +544,14 @@ def _ref_pipeline(spark: SparkSession, sf_dir: str, stem: bool) -> DataFrame:
 
 @query(
     "q_text_ngrams",
-    oracle="""
+    oracle=f"""
     SELECT * FROM (
         SELECT bigram, COUNT(*) AS n, COUNT(DISTINCT doc_id) AS df,
                ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, bigram) AS rnk
         FROM (
             SELECT doc_id, toks[i] || ' ' || toks[i+1] AS bigram
             FROM (SELECT doc_id,
-                         list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> '') AS toks
+                         {DUCK_WS_TOKENS} AS toks
                   FROM documents),
                  UNNEST(range(1, GREATEST(len(toks), 1))) AS u(i)
         )
@@ -567,8 +563,7 @@ def _ref_pipeline(spark: SparkSession, sf_dir: str, stem: bool) -> DataFrame:
 )
 def q_text_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
-    toks = F.filter(ws_tokens("text"), lambda x: x != "")
-    d = docs.select("doc_id", toks.alias("toks")).filter(F.size("toks") > 1)
+    d = docs.select("doc_id", ws_tokens("text").alias("toks")).filter(F.size("toks") > 1)
     bigrams = d.select(
         "doc_id",
         F.explode(
@@ -595,7 +590,7 @@ COLLOC_MIN_COUNT = 20
     oracle=f"""
     WITH d AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> '') AS toks
+               {DUCK_WS_TOKENS} AS toks
         FROM documents
     ),
     big AS (
@@ -627,8 +622,7 @@ COLLOC_MIN_COUNT = 20
 )
 def q_text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
-    toks = F.filter(ws_tokens("text"), lambda x: x != "")
-    d = docs.select("doc_id", toks.alias("toks"))
+    d = docs.select("doc_id", ws_tokens("text").alias("toks"))
     pairs = d.filter(F.size("toks") > 1).select(
         F.explode(
             F.transform(
@@ -664,7 +658,7 @@ def q_text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# BM25 retrieval (round 9): the Okapi/Lucene ranking function over the same
+# BM25 retrieval: the Okapi/Lucene ranking function over the same
 # tokenizer every text operator shares. The reference's pipeline stops at
 # incidence vectors (ProcessData.java:454-472); BM25 is the retrieval stage a
 # corpus engine pairs with that index — and the relevance-ranking primitive a
@@ -673,7 +667,7 @@ def q_text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: Fixed retrieval query (bounded, engine-constant — like the Porter goldens).
 BM25_QUERY_TERMS = ("spark", "hash", "window", "merge")
-#: Second fixed query point (round 15, VERDICT r14 item 6): the same term
+#: Second fixed query point: the same term
 #: set the second hybrid-RRF point uses (similarity.RRF2_QUERY_TERMS —
 #: equality pinned by test_plans), so the ranker itself is driver-proved at
 #: the point the fused kernel consumes, not only through RRF at RRF_LIST_K.
@@ -704,8 +698,7 @@ def _bm25_oracle(terms: tuple[str, ...]) -> str:
     return f"""
     WITH tok AS (
         SELECT d.doc_id, u.token AS term
-        FROM documents d, UNNEST(list_transform(string_split_regex(lower(trim(d.text)), '\\s+'), x -> regexp_replace(x, '\\pP', '', 'g'))) AS u(token)
-        WHERE u.token <> ''
+        FROM documents d, UNNEST({DUCK_TOKENS}) AS u(token)
     ),
     dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
     n AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs FROM documents),
@@ -751,7 +744,7 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_bm25_oracle(BM25_QUERY_TERMS_2),
     category="text",
     description=(
-        "Second BM25 query point (round 15, VERDICT r14 item 6): the same "
+        "Second BM25 query point: the same "
         "bm25_rank kernel at the term set the second hybrid-RRF point "
         "consumes (filter/scan/batch/stream), at the full top-20 depth. "
         "q_sim_hybrid_rrf2 proves this point only through the fused RRF "
@@ -777,7 +770,7 @@ def bm25_rank(
     ``include_micro`` appends the exact BIGINT micro-score (1e-6 fixed
     point) the ordering already runs on — downstream rankers (hybrid RRF)
     rank on it directly instead of re-deriving order from the DOUBLE
-    ``bm25`` display column (ADVICE r12: micro << 2^53 keeps the division
+    ``bm25`` display column (micro << 2^53 keeps the division
     injective today, but the integer is the contract).
 
     Scale shape: ONE corpus tokenize + ONE doc-keyed shuffle total — the
@@ -862,8 +855,7 @@ def bm25_rank(
     oracle=f"""
     WITH d AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                           x -> x <> '') AS toks
+               {DUCK_WS_TOKENS} AS toks
         FROM documents
     ),
     tri AS (
@@ -878,7 +870,7 @@ def bm25_rank(
            COUNT(*) AS n_shingles,
            -- CAST: DuckDB widens SUM(INTEGER) to HUGEINT (surfaces as
            -- DECIMAL through the typed fetch) where Spark SUM(int) is
-           -- BIGINT — values equal, types hash-differ (round-11 sweep)
+           -- BIGINT — values equal, types hash-differ
            CAST(SUM(CASE WHEN f.df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_unique,
            SUM(CASE WHEN f.df = 1 THEN 1 ELSE 0 END) / COUNT(*) AS unique_pct,
            {dsum_sql('ln(f.df)', 6)} / COUNT(*) AS mean_log_df
@@ -887,15 +879,15 @@ def bm25_rank(
     """,
     category="text",
     description=(
-        "Corpus n-gram novelty scoring (round 11) — the data-selection "
+        "Corpus n-gram novelty scoring — the data-selection "
         "metric behind D4-style redundancy pruning: per document, over its "
         "DISTINCT word-trigram shingles, the count, how many are unique to "
         "it corpus-wide (df = 1), the unique fraction, and the mean log "
         "doc-frequency (low = novel content, high = boilerplate shared "
         "across the corpus). One tokenize pass with per-doc array_distinct "
         "dedup, one shingle-keyed exchange feeding a COUNT-over-window df "
-        "(round 17 — no df join, no distinct aggregate), one doc-keyed "
-        "aggregate — and (round 12, VERDICT r11 item 7) shingles cross "
+        "(no df join, no distinct aggregate), one doc-keyed "
+        "aggregate — and shingles cross "
         "the exchanges as 8-byte xxhash64 fingerprints, never as strings: "
         "the raw trigram exists only inside the map-side explode, the same "
         "fingerprint-not-payload move as q_profile_documents, exact "
@@ -910,15 +902,14 @@ def bm25_rank(
 def q_text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .relational import dsum
 
-    # fan_out (round 17): the tokenize + trigram fingerprint fold run before
+    # fan_out: the tokenize + trigram fingerprint fold run before
     # the sh repartition — inside the single-row-group fixture scan's one
     # task. Per-row; df/ln ride the window count + dsum grid downstream.
     docs = fan_out(t(spark, sf_dir, "documents"))
-    toks = F.filter(ws_tokens("text"), lambda x: x != "")
-    d = docs.select("doc_id", toks.alias("toks")).filter(F.size("toks") >= 3)
-    # COUNT-OVER-WINDOW form (round 17, guide §2.4 "remove shuffles
-    # outright"). The round-16 lazy localCheckpoint on the distinct shingle
-    # table was the round's one driver-confirmed regression (0.64x cold):
+    d = docs.select("doc_id", ws_tokens("text").alias("toks")).filter(F.size("toks") >= 3)
+    # COUNT-OVER-WINDOW form (guide §2.4 "remove shuffles outright"). A
+    # lazy localCheckpoint on the distinct shingle table was measured as a
+    # 0.64x cold regression:
     # the barrier serialized tokenize -> materialize -> join where the
     # unpinned plan overlapped both consumers, and it still paid the
     # distinct exchange + the df groupBy + a broadcast build. This shape
@@ -928,7 +919,7 @@ def q_text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   the distinct (doc_id, sh) multiset — no distinct exchange at all;
     # - df (docs-per-shingle) is a COUNT over the sh window after ONE
     #   sh-keyed repartition — the containment_report shh-window trade,
-    #   adjudicated round 13 — instead of a groupBy + join back.
+    #   instead of a groupBy + join back.
     # Plan: tokenize once, Exchange(sh), Window, partial-agg, Exchange
     # (doc_id) — two data exchanges total (was: double tokenize, distinct
     # exchange x2, df exchange, broadcast build). Cold A/B (fresh process,
@@ -968,6 +959,6 @@ def q_text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             (uniq / n).alias("unique_pct"),
             (dsum(F.log("df"), 6) / n).alias("mean_log_df"),
         )
-        # pin output order like the sibling round-11 queries (ADVICE r11)
+        # pin a deterministic output order (doc_id)
         .orderBy("doc_id")
     )

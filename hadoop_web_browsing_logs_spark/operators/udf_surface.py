@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.text_stats import DUCK_WS_TOKENS
 from ..plans.registry import query
 from ._util import t
 
@@ -155,11 +156,10 @@ class _ContextWindows:
 
 @query(
     "q_udtf_context_windows",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                           x -> x <> '') AS tk
+               {DUCK_WS_TOKENS} AS tk
         FROM documents
         WHERE text IS NOT NULL
     )

@@ -244,7 +244,8 @@ def test_bench_ambient_annotates_regression_lines():
 def test_bench_trend_loader_survives_malformed_snapshots(tmp_path, monkeypatch):
     """ADVICE r11: a BENCH_r*.json with an unexpected shape (list-valued
     'queries', non-dict 'parsed') must degrade to 'skip that snapshot',
-    not abort the bench after all samples were taken."""
+    not abort the bench after all samples were taken. A snapshot taken at
+    another core count is left out of the history."""
     import importlib.util
     import json
     import os
@@ -255,15 +256,19 @@ def test_bench_trend_loader_survives_malformed_snapshots(tmp_path, monkeypatch):
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
 
-    good = {"sf": 0.1, "parsed": {"queries": {"q_a": 1.5}}}
-    bad1 = {"sf": 0.1, "parsed": {"queries": ["not", "a", "dict"]}}
-    bad2 = {"sf": 0.1, "parsed": ["list"]}
+    good = {"sf": 0.1, "cpus": 4, "parsed": {"queries": {"q_a": 1.5}}}
+    bad1 = {"sf": 0.1, "cpus": 4, "parsed": {"queries": ["not", "a", "dict"]}}
+    bad2 = {"sf": 0.1, "cpus": 4, "parsed": ["list"]}
+    # same SF, other core count: not comparable history, must be left out
+    other_cpus = {"sf": 0.1, "cpus": 32, "parsed": {"queries": {"q_a": 0.4}}}
     (tmp_path / "BENCH_r01.json").write_text(json.dumps(good))
     (tmp_path / "BENCH_r02.json").write_text(json.dumps(bad1))
     (tmp_path / "BENCH_r03.json").write_text(json.dumps(bad2))
     (tmp_path / "BENCH_r04.json").write_text("{truncated")
+    (tmp_path / "BENCH_r05.json").write_text(json.dumps(other_cpus))
     monkeypatch.setattr(
         bench.os.path, "dirname", lambda p: str(tmp_path), raising=True
     )
-    trend = bench._load_trend("0.1", {"q_a": 1.6})
+    trend = bench._load_trend("0.1", 4, {"q_a": 1.6})
     assert trend == {"q_a": {"r1": 1.5, "now": 1.6}}
+    assert bench._load_trend("0.1", 32, {})["q_a"] == {"r5": 0.4}

@@ -259,9 +259,9 @@ def test_global_cumsum_and_rank_partition_invariant(spark):
 
 
 def test_sql_text_hash_expressions_match_reference_python(spark):
-    """Round-6 pin for the SQL-text expression rewrite (`_TOKS_SQL`,
+    """Pin for the LSH token path (`distinct_tokens()` feeding the SQL-text
     `_POLY_SQL`, the xxhash64 band slots): on randomized documents the
-    parsed-SQL tokenizer+polynomial-hash pipeline must equal an independent
+    tokenizer+parsed-SQL polynomial-hash pipeline must equal an independent
     pure-Python evaluation of the same definitions, and the banded pipeline
     must produce identical pairs through either hashing path's verify (the
     exact-Jaccard stage is hash-representation-independent)."""
@@ -269,8 +269,8 @@ def test_sql_text_hash_expressions_match_reference_python(spark):
 
     from hadoop_web_browsing_logs_spark.operators.dedup import (
         _POLY_SQL,
-        _TOKS_SQL,
         HASH_MOD,
+        distinct_tokens,
         minhash_lsh_pairs,
     )
 
@@ -302,11 +302,9 @@ def test_sql_text_hash_expressions_match_reference_python(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {
         r["doc_id"]: (list(r["toks"]), list(r["hs"]))
-        for r in df.select(
-            "doc_id",
-            F.expr(_TOKS_SQL).alias("toks"),
-            F.expr(f"transform({_TOKS_SQL}, tok -> {_POLY_SQL})").alias("hs"),
-        ).collect()
+        for r in df.select("doc_id", distinct_tokens().alias("toks"))
+        .select("doc_id", "toks", F.expr(f"transform(toks, tok -> {_POLY_SQL})").alias("hs"))
+        .collect()
     }
     for doc_id, text in docs:
         toks = py_toks(text)

@@ -104,6 +104,59 @@ def test_tokenize_order_strip_then_filter_then_stem(spark):
     assert terms == ["cat", "meet"]
 
 
+# Edge texts for the one tokenizer: empty, spaces only, tab/newline ends
+# (Spark's trim strips spaces only, so the split keeps empty end tokens),
+# NULL, an all-punctuation token, and Unicode punctuation around words.
+TOKENIZER_EDGES = [
+    (1, ""),
+    (2, "   "),
+    (3, "\tA  b\n"),
+    (4, None),
+    (5, "ok ... !? done"),
+    (6, "«Hola», ¿qué tal? — don’t…  $5+"),
+]
+
+
+def _duck_edges(duck, select: str):
+    """Run ``select`` (which reads ``documents``) over TOKENIZER_EDGES."""
+    rows = ", ".join("(?, CAST(? AS VARCHAR))" for _ in TOKENIZER_EDGES)
+    params = [v for row in TOKENIZER_EDGES for v in row]
+    return duck.execute(
+        f"WITH documents(doc_id, text) AS (VALUES {rows}) {select}", params
+    )
+
+
+def test_ws_tokens_matches_duckdb_twin(spark, duck):
+    from hadoop_web_browsing_logs_spark.functions.text_stats import DUCK_WS_TOKENS, ws_tokens
+    from hadoop_web_browsing_logs_spark.plans.oracle import oracle_mismatch
+
+    docs = spark.createDataFrame(TOKENIZER_EDGES, "doc_id long, text string")
+    got = docs.select("doc_id", ws_tokens("text").alias("toks"))
+    why = oracle_mismatch(
+        got, _duck_edges(duck, f"SELECT doc_id, {DUCK_WS_TOKENS} AS toks FROM documents")
+    )
+    assert why is None, why
+    assert {r.doc_id: r.toks for r in got.collect()}[3] == ["a", "b"]
+
+
+def test_tokenize_matches_duckdb_twin(spark, duck):
+    from hadoop_web_browsing_logs_spark.functions.text_stats import DUCK_TOKENS
+    from hadoop_web_browsing_logs_spark.plans.oracle import oracle_mismatch
+
+    docs = spark.createDataFrame(TOKENIZER_EDGES, "doc_id long, text string")
+    got = text_ops.tokenize(docs)
+    why = oracle_mismatch(
+        got,
+        _duck_edges(
+            duck, f"SELECT doc_id, u.token FROM documents, UNNEST({DUCK_TOKENS}) AS u(token)"
+        ),
+    )
+    assert why is None, why
+    assert sorted(r.token for r in got.filter("doc_id = 6").collect()) == [
+        "$5+", "dont", "hola", "qué", "tal",
+    ]
+
+
 def _write_refjob_inputs(tmp_path, centers: str) -> list[str]:
     """The golden corpus as ``<id>.txt`` files plus the side files; returns
     refjob's four arguments (docs dir, output dir, stopwords, centers)."""

@@ -289,9 +289,9 @@ def test_kmeans_lloyd_ragged_member_counts(spark):
         (10, [0.1, 0.0, 0.0]),
         (11, [0.2, 0.1, 0.0]),
         # ragged rows: short and empty — their distance to EVERY center is
-        # NULL (zip_with pads), and NULL sorts first in the struct-min, so
-        # they deterministically land on the LOWEST center_id (= 0); the
-        # fix under test is that they are COUNTED there, exactly once
+        # NULL (zip_with pads), so every candidate ties and the tie goes to
+        # the LOWEST center_id (= 0); the fix under test is that they are
+        # COUNTED there, exactly once
         (12, []),
         (13, [0.3, 0.2]),
         # full-dimension rows near center 1
