@@ -12,8 +12,12 @@ audit:
 bench:
 	python bench.py
 
+# rebuild tests/plan_shapes.json, the per-query physical node counts
+# (shuffles by partitioning, broadcasts, joins, scans, windows, sorts,
+# aggregates, Python stages) that tests/test_plans.py checks, through the
+# test suite's own registry pass at its SF and core count
 plans:
-	python docs/plans/dump_plans.py
+	python -m tests.test_plans
 
 # the full round bundle: suite, dual-scale oracle audit, bench JSON
 evidence: test audit bench

@@ -193,7 +193,8 @@ BASELINE_SET = HEADLINE[:21]
 
 def _load_trend(sf: str, cpus: int, per_query: dict[str, float]) -> dict[str, dict[str, float]]:
     """Per-query median history: every committed ``BENCH_r*.json`` snapshot
-    taken at the same SF and core count (top-level ``cpus``), plus
+    taken at the same SF and core count (top-level ``cpus``;
+    ``BENCH_r<N>_c<cores>.json`` keys as ``r<N>`` too), plus
     this run under the ``"now"`` key. A snapshot from another core count
     would read as a regression or a speed-up that the code never made."""
     import glob as _glob
@@ -202,7 +203,7 @@ def _load_trend(sf: str, cpus: int, per_query: dict[str, float]) -> dict[str, di
     trend: dict[str, dict[str, float]] = {}
     here = os.path.dirname(os.path.abspath(__file__))
     for path in sorted(_glob.glob(os.path.join(here, "BENCH_r*.json"))):
-        m = _re.search(r"BENCH_r(\d+)\.json$", path)
+        m = _re.search(r"BENCH_r(\d+)(?:_c\d+)?\.json$", path)
         if not m:
             continue
         try:

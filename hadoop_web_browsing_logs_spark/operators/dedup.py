@@ -355,8 +355,15 @@ def jaccard_prefix_pairs(
     At web scale, swap the string token arrays for xxhash64 fingerprints
     as minhash_lsh_pairs does (cheaper intersects, 2^-64 collision
     caveat); strings are kept here so the DuckDB twin is exact."""
+    d, cands = _jaccard_prefix_candidates(docs, tau)
+    a = d.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("toks_a"))
+    b = d.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("toks_b"))
+    inter = F.size(F.array_intersect("toks_a", "toks_b"))
+    jac = inter.cast("double") / (F.size("toks_a") + F.size("toks_b") - inter)
     scored = (
-        _jaccard_prefix_scored(docs, tau)
+        cands.join(a, "doc_a")
+        .join(b, "doc_b")
+        .select("doc_a", "doc_b", jac.alias("jaccard"))
         # Materialization barrier BEFORE the threshold filter (round 16,
         # guide §7.2 "duplicated subtrees"): left as one lazy plan,
         # Catalyst pushes `jaccard >= tau` through the projection into the
@@ -374,23 +381,6 @@ def jaccard_prefix_pairs(
     # final threshold on the double value — the same expression (and
     # therefore the same IEEE bits) as the quadratic baseline/oracle
     return scored.filter(F.col("jaccard") >= tau)
-
-
-def _jaccard_prefix_scored(docs: DataFrame, tau: float) -> DataFrame:
-    """The verify stage's scored-candidates subtree (candidate pairs with
-    their exact jaccard), factored out of :func:`jaccard_prefix_pairs` so
-    plan dumps can show the verify-join shape that the checkpoint barrier
-    otherwise truncates to a LogicalRDD scan."""
-    d, cands = _jaccard_prefix_candidates(docs, tau)
-    a = d.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("toks_a"))
-    b = d.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("toks_b"))
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    jac = inter.cast("double") / (F.size("toks_a") + F.size("toks_b") - inter)
-    return (
-        cands.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-    )
 
 
 @query(

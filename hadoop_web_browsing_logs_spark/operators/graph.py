@@ -609,7 +609,8 @@ def label_propagation(edges: DataFrame, iterations: int = LPA_ITERATIONS) -> Dat
     src-partitioned checkpointed edge table with NO exchange or sort: it
     leaves the argmax aggregation hash(dst)=hash(node) partitioned and
     sorted, and the per-iteration ``_aqe_off`` checkpoint preserves both
-    (plan-pinned by the dump in docs/plans/).
+    (the q_graph_label_propagation row of tests/plan_shapes.json pins the
+    last iteration's two hash exchanges and its exchange-free join).
     Collapsing to one exchange by pre-repartitioning on dst would ship the
     RAW edge-sized join output; at corpus scale the partial-agg route moves
     strictly less data. All weight sums are exact BIGINTs — no float policy

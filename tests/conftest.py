@@ -21,13 +21,12 @@ from hadoop_web_browsing_logs_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_CORRECTNESS = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+CPUS = int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8"))
 
 
 @pytest.fixture(scope="session")
 def spark():
-    cpus = int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8"))
-    s = get_spark("engine-tests", cpus=cpus)
-    yield s
+    yield get_spark("engine-tests", cpus=CPUS)
 
 
 def _schema(sf_dir: str) -> str:

@@ -261,14 +261,18 @@ def test_bench_trend_loader_survives_malformed_snapshots(tmp_path, monkeypatch):
     bad2 = {"sf": 0.1, "cpus": 4, "parsed": ["list"]}
     # same SF, other core count: not comparable history, must be left out
     other_cpus = {"sf": 0.1, "cpus": 32, "parsed": {"queries": {"q_a": 0.4}}}
+    # an 8-core snapshot carries a _c8 suffix and keys as its round
+    eight_cpus = {"sf": 0.1, "cpus": 8, "parsed": {"queries": {"q_a": 0.9}}}
     (tmp_path / "BENCH_r01.json").write_text(json.dumps(good))
     (tmp_path / "BENCH_r02.json").write_text(json.dumps(bad1))
     (tmp_path / "BENCH_r03.json").write_text(json.dumps(bad2))
     (tmp_path / "BENCH_r04.json").write_text("{truncated")
     (tmp_path / "BENCH_r05.json").write_text(json.dumps(other_cpus))
+    (tmp_path / "BENCH_r06_c8.json").write_text(json.dumps(eight_cpus))
     monkeypatch.setattr(
         bench.os.path, "dirname", lambda p: str(tmp_path), raising=True
     )
     trend = bench._load_trend("0.1", 4, {"q_a": 1.6})
     assert trend == {"q_a": {"r1": 1.5, "now": 1.6}}
     assert bench._load_trend("0.1", 32, {})["q_a"] == {"r5": 0.4}
+    assert bench._load_trend("0.1", 8, {})["q_a"] == {"r6": 0.9}

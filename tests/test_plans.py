@@ -1,21 +1,31 @@
 """Physical-plan structure tests — pin the scale properties SCALE.md claims:
 pushdown reaches the scan, dims broadcast, global top-k is TakeOrdered, the
-stopword anti-join broadcasts, partial aggregation exists for collect_set."""
+stopword anti-join broadcasts, partial aggregation exists for collect_set.
+Every registered query's node counts are checked against the digest
+``plan_shapes.json``; ``make plans`` (``python -m tests.test_plans``)
+rebuilds it after an intended plan change."""
 
 from __future__ import annotations
 
-import re
+import json
+import os
 
 import pytest
 
 from hadoop_web_browsing_logs_spark.plans.registry import get_query
+from hadoop_web_browsing_logs_spark.plans.shape import PYTHON_NODES, plan_shape
 
-from .conftest import SF_DIR
+from .conftest import CPUS, SF_DIR
+
+DIGEST = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plan_shapes.json")
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def _plan(spark, name: str) -> str:
-    df = get_query(name).fn(spark, SF_DIR)
-    return df._jdf.queryExecution().executedPlan().toString()
+    return _executed(get_query(name).fn(spark, SF_DIR))
 
 
 def test_q1_pushdown_and_pruning(spark):
@@ -53,14 +63,7 @@ def test_inverted_index_has_partial_aggregation(spark):
 
 @pytest.mark.parametrize("name", ["q_vec_nearest_center", "q_sim_ivf_candidates", "q_sim_ivf_ann"])
 def test_nearest_center_is_broadcast_nested_loop(spark, name):
-    df = get_query(name).fn(spark, SF_DIR)
-    assert "BroadcastNestedLoopJoin" in df._jdf.queryExecution().executedPlan().toString()
-    if name == "q_sim_ivf_ann":
-        # the probe is the map-only kernel and the exact baseline runs once:
-        # the only windows left are the exact and the IVF top-k
-        formatted = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-        tree = formatted.split("\n\n")[0]
-        assert len(re.findall(r"\bWindow \(\d+\)", tree)) == 2, tree
+    assert "BroadcastNestedLoopJoin" in _plan(spark, name)
 
 
 def test_cache_reuse_in_plan(spark):
@@ -286,19 +289,15 @@ def test_substring_dedup_shuffles_hashes_only(spark):
     assert "Exchange hashpartitioning(win_hash" in plan, plan[:800]
 
 
-@pytest.fixture(scope="module")
-def registry_plans(spark):
-    """ONE pass over the whole registry for the four registry-wide plan
-    lints (round 17, VERDICT r16 item 3): each lint previously rebuilt all
-    ~193 query DataFrames itself — four full Catalyst passes (and four runs
-    of the iterative queries' driver-side fixpoints) for one sweep's worth
-    of information, 267 s of the suite's 28 min. Build every query once and
-    capture the three renderings the lints consume. The temp-view leak
-    check rides the construction pass (it is about what PLAN CONSTRUCTION
-    leaks, so it must be snapshotted around exactly this loop)."""
+def _registry_plans(spark) -> dict:
+    """ONE pass over the whole registry for the registry-wide plan lints
+    and the shape digest: build every query once and capture the three
+    renderings they consume. A pass costs a full Catalyst build of every
+    query plus the iterative queries' driver-side fixpoints, so no lint
+    rebuilds the registry itself. The temp-view leak check rides the
+    construction pass (it is about what PLAN CONSTRUCTION leaks, so it
+    must be snapshotted around exactly this loop)."""
     from hadoop_web_browsing_logs_spark.plans.registry import all_queries
-
-    from .conftest import SF_DIR
 
     pre_views = {v.name for v in spark.catalog.listTables()}
     plans = {}
@@ -312,6 +311,60 @@ def registry_plans(spark):
         }
     leaked = [v.name for v in spark.catalog.listTables() if v.name not in pre_views]
     return {"plans": plans, "leaked": leaked}
+
+
+@pytest.fixture(scope="module")
+def registry_plans(spark):
+    return _registry_plans(spark)
+
+
+def _shape_digest(spark, plans: dict) -> dict[str, dict]:
+    """The header (the SF and core count the plans were built at) and one
+    :func:`plan_shape` row per registered query."""
+    sf = os.path.basename(SF_DIR.rstrip("/"))
+    header = {"sf": sf, "cpus": spark.sparkContext.defaultParallelism}
+    rows = {name: plan_shape(rendered["executed"]) for name, rendered in sorted(plans.items())}
+    return {"_header": header, **rows}
+
+
+def test_plan_shapes_match_digest(spark, registry_plans):
+    """Every registered query keeps the node counts recorded in
+    plan_shapes.json: a new shuffle, a lost broadcast or a Python stage
+    moving in shows up here, named by query. After an intended change,
+    rebuild the digest with ``make plans`` and review its diff."""
+    with open(DIGEST, encoding="utf-8") as fh:
+        want = json.load(fh)
+    got = _shape_digest(spark, registry_plans["plans"])
+    built, session = want.pop("_header"), got.pop("_header")
+    assert built == session, f"{DIGEST} was built at {built}, this session runs at {session}"
+    changes = []
+    for name in sorted(want.keys() | got.keys()):
+        old, new = want.get(name), got.get(name)
+        if old is None or new is None:
+            changes.append(f"{name}: {old} -> {new}")
+        elif old != new:
+            moved = [
+                f"{k} {old.get(k, 0)} -> {new.get(k, 0)}"
+                for k in sorted(old.keys() | new.keys())
+                if old.get(k, 0) != new.get(k, 0)
+            ]
+            changes.append(f"{name}: " + ", ".join(moved))
+    assert not changes, "plan shapes differ from the digest:\n" + "\n".join(changes)
+
+
+def test_plan_shape_counts_node_kinds(spark):
+    from pyspark.sql import functions as F
+
+    df = spark.range(50).selectExpr("id", "id % 5 AS k")
+    before = plan_shape(_executed(df))
+    after = plan_shape(_executed(df.repartition(3)))
+    assert after == {**before, "Exchange RoundRobinPartitioning": 1}
+    joined = plan_shape(_executed(df.join(F.broadcast(spark.range(5).withColumnRenamed("id", "k")), "k")))
+    assert joined["BroadcastExchange"] == 1 and joined["BroadcastHashJoin"] == 1, joined
+    # column names and expression ids are not part of the shape
+    a = spark.range(5).toDF("a").localCheckpoint()
+    b = spark.range(5).toDF("b").localCheckpoint()
+    assert plan_shape(_executed(a)) == plan_shape(_executed(b)) == {"Scan ExistingRDD": 1}
 
 
 def test_no_cartesian_product_anywhere(registry_plans):
@@ -689,8 +742,6 @@ def test_python_stage_allowlist(registry_plans):
     UDF-surface demos. Python in any other path is the row-at-a-time slow
     path this engine's boundary policy (SCALE.md 'Python boundary policy')
     forbids."""
-    markers = ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas",
-               "MapInPandas", "FlatMapGroupsInPandasWithState", "AggregateInPandas")
     allowed = {
         "q_ref_pipeline", "q_text_stemmed_terms", "q_text_porter_gate",  # Porter stem
         "q_multimodal_features",                                         # mapInPandas
@@ -704,7 +755,7 @@ def test_python_stage_allowlist(registry_plans):
     }
     offenders = {}
     for name, rendered in registry_plans["plans"].items():
-        hits = sorted({m for m in markers if m in rendered["executed"]})
+        hits = sorted({m for m in PYTHON_NODES if m in rendered["executed"]})
         if hits and name not in allowed:
             offenders[name] = hits
     assert not offenders, f"undeclared Python stages: {offenders}"
@@ -728,3 +779,13 @@ def test_semantic_dedup_pair_join_keys_include_salt(spark):
     assert pair_joins, f"no pair join keyed on (center_id, salt):\n{plan}"
     # and the guard's salt expression is the portable Knuth hash
     assert "2654435761" in plan and "shiftright" in plan
+
+
+if __name__ == "__main__":
+    from hadoop_web_browsing_logs_spark.session import get_spark
+
+    spark = get_spark("engine-tests", cpus=CPUS)
+    digest = _shape_digest(spark, _registry_plans(spark)["plans"])
+    with open(DIGEST, "w", encoding="utf-8") as fh:
+        fh.write("{\n" + ",\n".join(f"  {json.dumps(k)}: {json.dumps(v)}" for k, v in digest.items()) + "\n}\n")
+    print(f"wrote {DIGEST}: {len(digest) - 1} queries")
