@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text_stats import DUCK_WS_TOKENS, ws_tokens
 from ..plans.registry import query
+from ..sources.readers import local_frame
 from ._util import fan_out, t
 from .dedup import JACCARD_THRESHOLD, PAIR_STRIDE
 
@@ -1240,6 +1241,10 @@ def q_llm_bpe_first_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: The BPE merge table: the model artifact a tokenizer ships.
+_BPE_SCHEMA = "rank int, left_sym string, right_sym string, merged string, cnt bigint"
+
+
 @query(
     "q_llm_bpe_merges",
     category="llm",
@@ -1258,9 +1263,7 @@ def q_llm_bpe_first_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_llm_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges = bpe_train(bpe_word_dict(t(spark, sf_dir, "documents")), BPE_MERGES)
-    return spark.createDataFrame(
-        merges, "rank int, left_sym string, right_sym string, merged string, cnt bigint"
-    )
+    return local_frame(spark, merges, _BPE_SCHEMA)
 
 
 #: The canonical BPE textbook example (low x5, lower x2, newest x6,
@@ -1276,7 +1279,6 @@ _BPE_GOLDEN_MERGES = [
     (4, "l", "o", "lo", 7),
     (5, "lo", "w", "low", 7),
 ]
-_BPE_SCHEMA = "rank int, left_sym string, right_sym string, merged string, cnt bigint"
 
 
 @query(
@@ -1296,12 +1298,10 @@ _BPE_SCHEMA = "rank int, left_sym string, right_sym string, merged string, cnt b
     ),
 )
 def q_llm_bpe_merges_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.createDataFrame([(1, _BPE_GOLDEN_TEXT)], ["doc_id", "text"])
+    docs = local_frame(spark, [(1, _BPE_GOLDEN_TEXT)], "doc_id bigint, text string")
     merges = bpe_train(bpe_word_dict(docs), len(_BPE_GOLDEN_MERGES))
-    got = spark.createDataFrame(merges, _BPE_SCHEMA).withColumn("g", F.lit(1))
-    want = spark.createDataFrame(_BPE_GOLDEN_MERGES, _BPE_SCHEMA).withColumn(
-        "w", F.lit(1)
-    )
+    got = local_frame(spark, merges, _BPE_SCHEMA).withColumn("g", F.lit(1))
+    want = local_frame(spark, _BPE_GOLDEN_MERGES, _BPE_SCHEMA).withColumn("w", F.lit(1))
     cols = ["rank", "left_sym", "right_sym", "merged", "cnt"]
     n = len(_BPE_GOLDEN_MERGES)
     return got.join(want, cols, "full_outer").agg(
@@ -1480,17 +1480,15 @@ _BPE_ENCODE_GOLDENS = [
     ),
 )
 def q_llm_bpe_encode_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    words = spark.createDataFrame(
-        [(w,) for w, _ in _BPE_ENCODE_GOLDENS], ["word"]
-    )
+    words = local_frame(spark, [(w,) for w, _ in _BPE_ENCODE_GOLDENS], "word string")
     got = (
         bpe_encode(words)
         .select("word", F.array_join("syms", " ").alias("encoding"))
         .withColumn("g", F.lit(1))
     )
-    want = spark.createDataFrame(
-        _BPE_ENCODE_GOLDENS, "word string, encoding string"
-    ).withColumn("w", F.lit(1))
+    want = local_frame(spark, _BPE_ENCODE_GOLDENS, "word string, encoding string").withColumn(
+        "w", F.lit(1)
+    )
     n = len(_BPE_ENCODE_GOLDENS)
     return got.join(want, ["word", "encoding"], "full_outer").agg(
         (

@@ -45,6 +45,7 @@ from ..functions.text_stats import (
     ws_tokens,
 )
 from ..plans.registry import query
+from ..sources.readers import local_frame
 from .relational import dsum_sql
 from ._util import fan_out, one_group, t
 
@@ -77,7 +78,7 @@ def remove_stopwords(tokens: DataFrame, spark: SparkSession, stopwords=STOPWORDS
     HashSet rejection (A6, ProcessData.java:408/416). For a list this small
     an ``isin`` filter would fold into codegen too; the anti-join form is the
     one that scales to million-word blocklists."""
-    sw = spark.createDataFrame([(w,) for w in stopwords], ["token"])
+    sw = local_frame(spark, [(w,) for w in stopwords], "token STRING")
     return tokens.join(F.broadcast(sw), "token", "left_anti")
 
 
@@ -305,7 +306,7 @@ def q_text_stemmed_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_porter_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.porter import PORTER_GOLDENS
 
-    vec = spark.createDataFrame(list(PORTER_GOLDENS.items()), ["word", "expected"])
+    vec = local_frame(spark, list(PORTER_GOLDENS.items()), "word STRING, expected STRING")
     return vec.withColumn("got", stem_udf(F.col("word"))).agg(
         (
             (F.count(F.lit(1)) == len(PORTER_GOLDENS))

@@ -75,14 +75,16 @@ def run_reference_jobs(
     """Execute Job 1 + Job 2; write both reference-format outputs; return the
     clusters ``(cluster_id, center_id, n_members, members)``."""
     from .operators.text import cluster_terms, densify_incidence, inverted_index
-    from .sources.readers import read_corpus_dir
+    from .sources.readers import corpus_doc_count, local_frame, read_corpus_dir
     from .sources.writers import write_reference_text
 
     with open(stopwords_file) as fh:
         stopwords = tuple(w.strip().lower() for w in fh if w.strip())
 
     corpus = read_corpus_dir(spark, input_dir)
-    n_docs = corpus.count()  # A3: corpus cardinality == vector length
+    # A3: the vector length is the file count, as in the reference's
+    # getFileCount; it comes from the scan's listing, with no job
+    n_docs = corpus_doc_count(corpus)
     centers = _read_centers(centers_file, n_docs)
 
     # two consumers (the Job-1 export and the assignment): build it once
@@ -90,7 +92,7 @@ def run_reference_jobs(
     dense = densify_incidence(index, n_docs=n_docs, one_based=True)
     write_reference_text(dense, f"{output_dir}/inverted_index", term_col="term", vec_col="vec")
 
-    centers_df = spark.createDataFrame(list(enumerate(centers, 1)), "center_id INT, postings ARRAY<INT>")
+    centers_df = local_frame(spark, list(enumerate(centers, 1)), "center_id INT, postings ARRAY<INT>")
     clusters = cluster_terms(index, centers_df)
     kmeans = clusters.sort("cluster_id").select(F.concat_ws("\t", F.col("cluster_id").cast("string"), "members"))
     kmeans.write.mode("overwrite").text(f"{output_dir}/kmeans")

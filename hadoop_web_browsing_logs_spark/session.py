@@ -28,6 +28,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+#: The directory that holds this package: Python workers import the
+#: package's UDFs from it, wherever the driver was started.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "hadoop-web-browsing-logs-spark",
@@ -86,6 +90,9 @@ def get_spark(
         # the unit, and this flag keeps the nanos case readable (it is a
         # no-op for micros files).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # the package has no install metadata, so a Python worker started
+        # outside the checkout can import it only through this path
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

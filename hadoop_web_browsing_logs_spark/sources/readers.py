@@ -9,8 +9,10 @@ Reference scans (all text-file based):
   substring parse (ProcessData.java:392-401, 417) → ``F.input_file_name()`` +
   ``regexp_extract``.
 - A3 filesystem metadata scan — ``fs.getContentSummary``/``listStatus``
-  (ProcessData.java:627-645) → the corpus is a DataFrame, so corpus cardinality
-  is a plain distinct count, computed inside the same plan.
+  (ProcessData.java:627-645) → :func:`corpus_doc_count`, the number of files
+  in the scan's own listing that carry a doc id. Like the reference's
+  ``getFileCount`` it counts an empty file, which the scan yields no row
+  for, and it runs no job.
 
 The new engine's canonical storage is columnar Parquet (vectorized scan, predicate
 pushdown, column pruning — none of which the reference's text pipeline had); CSV /
@@ -20,10 +22,13 @@ JSON / text remain supported sources for ingestion parity.
 from __future__ import annotations
 
 import os
+import re
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 #: The driver-generated fixture tables (TESTDATA.md): TPC-H-ish star schema +
 #: events stream + documents corpus + embeddings.
@@ -117,6 +122,41 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A small driver-side table (stopwords, centers, golden vectors) as a
+    DataFrame typed by ``ddl``.
+
+    It goes to the JVM as one Arrow table and plans as a
+    ``LocalTableScan``. A plain ``createDataFrame(<list>)`` plans a
+    ``Scan ExistingRDD`` over a pickled Python RDD instead, so every action
+    on it, building its broadcast included, runs a stage of Python workers.
+    The ``pyarrow.Table`` path has no silent fallback to that RDD: the
+    pandas path falls back on an empty frame or on any Arrow error."""
+    schema = T.StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = zip(*rows) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays([pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, schema)
+
+
+#: A corpus file's doc id: the digits before the extension of its name.
+#: The scan (``regexp_extract``, a Java ``find``) and the listing
+#: (:func:`corpus_doc_count`, ``re.search``) apply the same pattern; ASCII
+#: so that Python's ``\d`` matches only what Java's does.
+_DOC_ID = r"(\d+)\.[^./]*$"
+_INT_MAX = 2**31 - 1
+
+
+def corpus_doc_count(corpus: DataFrame) -> int:
+    """The number of documents in a :func:`read_corpus_dir` frame, from its
+    file listing: every file whose name gives a doc id in the INT range
+    (a larger one is NULL under ``try_cast``, so the scan skips it). An
+    empty file counts, as in the reference (ProcessData.java:629-631),
+    though the scan yields no row for it."""
+    ids = (re.search(_DOC_ID, f, re.ASCII) for f in corpus.inputFiles())
+    return sum(1 for m in ids if m and int(m[1]) <= _INT_MAX)
+
+
 def read_corpus_dir(spark: SparkSession, path: str) -> DataFrame:
     """Reference-parity corpus reader: a directory of ``<int>.<ext>`` text files,
     one document per file.
@@ -139,7 +179,7 @@ def read_corpus_dir(spark: SparkSession, path: str) -> DataFrame:
             "doc_id",
             # try_cast: a non-matching filename yields "" which ANSI cast
             # would throw on (the reference threw NumberFormatException)
-            F.regexp_extract(F.col("_file"), r"(\d+)\.[^./]*$", 1).try_cast("int"),
+            F.regexp_extract(F.col("_file"), _DOC_ID, 1).try_cast("int"),
         )
         # non-numeric filenames crash the reference with NumberFormatException
         # (SURVEY Q4); here they are skipped explicitly

@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 
 from ..operators.relational import dsum, dsum_sql
 from ..plans.registry import query
+from ..sources.readers import local_frame
 
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
@@ -431,9 +432,7 @@ EVENT_CATEGORIES = [
 
 
 def event_category_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        EVENT_CATEGORIES, "event_type string, category string, weight int"
-    )
+    return local_frame(spark, EVENT_CATEGORIES, "event_type string, category string, weight int")
 
 
 def enrich_and_rollup(events: DataFrame, spark: SparkSession) -> DataFrame:

@@ -12,7 +12,14 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from hadoop_web_browsing_logs_spark.sources.readers import load_table, read_corpus_dir, read_csv, read_json
+from hadoop_web_browsing_logs_spark.sources.readers import (
+    corpus_doc_count,
+    load_table,
+    local_frame,
+    read_corpus_dir,
+    read_csv,
+    read_json,
+)
 from hadoop_web_browsing_logs_spark.sources.writers import write_parquet
 
 from .conftest import SF_DIR
@@ -88,6 +95,62 @@ def test_corpus_reader_multifile(spark, tmpdir):
     rows = {r.doc_id: r.text for r in corpus.collect()}
     assert set(rows) == {1, 2, 3, 4, 5}
     assert rows[3] == "doc number 3\nsecond line 3"
+
+
+def test_corpus_doc_count_applies_the_scan_filename_rule(spark, tmpdir):
+    """The listing counts the files the scan takes a doc id from, the empty
+    one included (the scan yields no row for it); a non-numeric name, an id
+    past the INT range and a hidden ``_`` file are left out of both."""
+    for name, text in [("1.txt", "apple pie"), ("2.txt", ""), ("3.log", "banana"),
+                       ("README.txt", "x"), ("2147483648.txt", "y"), ("_4.txt", "z")]:
+        with open(os.path.join(tmpdir, name), "w") as f:
+            f.write(text)
+    corpus = read_corpus_dir(spark, tmpdir)
+    assert sorted(r.doc_id for r in corpus.collect()) == [1, 3]
+    assert corpus_doc_count(corpus) == 3
+
+
+@pytest.mark.parametrize(
+    "rows, ddl",
+    [
+        ([(1, [2, 3]), (2, [])], "center_id INT, postings ARRAY<INT>"),
+        ([(1, "x", 7)], "doc_id BIGINT, text STRING, weight INT"),
+        ([], "token STRING"),
+    ],
+    ids=["array_int", "scalars", "empty"],
+)
+def test_local_frame_is_a_typed_local_relation(spark, rows, ddl):
+    """A driver-side table keeps its DDL types and plans as a JVM local
+    relation, not a pickled Python RDD, so no action on it starts Python
+    workers."""
+    from pyspark.sql import types as T
+
+    df = local_frame(spark, rows, ddl)
+    assert df.schema == T.StructType.fromDDL(ddl)
+    assert [tuple(r) for r in df.collect()] == rows
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.startswith("LocalTableScan <empty>" if not rows else "LocalTableScan ["), plan
+
+
+def test_package_builds_frames_only_through_local_frame():
+    """``createDataFrame(<list>)`` and ``parallelize`` build a Python RDD;
+    the package builds its small tables with :func:`local_frame` only."""
+    import inspect
+    import re
+
+    import hadoop_web_browsing_logs_spark as pkg
+    from hadoop_web_browsing_logs_spark.sources import readers
+
+    root = os.path.dirname(pkg.__file__)
+    helper = inspect.getsource(local_frame)
+    offenders = []
+    for path in glob.glob(f"{root}/**/*.py", recursive=True):
+        with open(path, encoding="utf-8") as fh:
+            src = fh.read()
+        if path == readers.__file__:
+            src = src.replace(helper, "")
+        offenders += [f"{path}: {m[0]}" for m in re.finditer(r".*(createDataFrame\(|\.parallelize\().*", src)]
+    assert not offenders, offenders
 
 
 def test_corpus_reader_preserves_line_order(spark, tmpdir):

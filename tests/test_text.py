@@ -203,6 +203,23 @@ def test_refjob_end_to_end(spark, tmp_path, centers, kmeans):
     assert _text_lines(tmp_path / "out" / "kmeans") == kmeans
 
 
+def test_refjob_counts_empty_documents(spark, tmp_path):
+    """A zero-byte document still owns a vector slot, as in the reference's
+    file count (ProcessData.java:629-631): four files give four-slot
+    vectors and take four-slot centers, though the scan has no row for the
+    empty one."""
+    from hadoop_web_browsing_logs_spark.refcli import run_reference_jobs
+
+    args = _write_refjob_inputs(tmp_path, "[1,0,0,0,]\n[0,1,0,0,]\n[0,0,1,0,]\n")
+    (tmp_path / "docs" / "4.txt").write_text("")
+    run_reference_jobs(spark, *args)
+    job1 = _text_lines(tmp_path / "out" / "inverted_index")
+    assert "cat\t[1,1,0,0,]" in job1
+    assert "meet\t[1,0,1,0,]" in job1
+    assert len(job1) == 8
+    assert _text_lines(tmp_path / "out" / "kmeans") == REFJOB_KMEANS
+
+
 @pytest.mark.parametrize(
     "centers, why",
     [
