@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from ..functions.text_stats import DUCK_TOKENS, DUCK_WS_TOKENS, fingerprint_md5, ws_tokens
 from ..functions.vector import duck_cosine_similarity
 from ..plans.registry import query
-from ..session import SessionMemo
+from ..session import SessionMemo, barrier
 from .vectors import DUCK_VECTORS, load_vectors
 from ._util import fan_out, t
 
@@ -150,22 +150,19 @@ def q_dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # intersect instead of intersect+union; integer arithmetic, bit-identical
     inter = F.size(F.array_intersect("toks_a", "toks_b"))
     jac = inter.cast("double") / (F.size("toks_a") + F.size("toks_b") - inter)
-    return (
-        a.join(b, F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        # same barrier as jaccard_prefix_pairs (round 16): without it the
-        # threshold pushes into the theta-join condition and the intersect
-        # runs up to 4x per pair; the scored all-pairs table IS this
-        # query's labeled quadratic intermediate, so materializing it
-        # changes nothing about its (deliberate) O(n^2) COMPUTE shape.
-        # STORAGE note (ADVICE r16): the barrier also gives the scored
-        # pairs quadratic executor-storage residency the lazy plan did not
-        # have — acceptable for the labeled differential baseline at
-        # fixture SFs, and this query must never run beyond them (the
-        # prefix join is the declared scale path).
-        .localCheckpoint(eager=False)
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+    # same barrier as jaccard_prefix_pairs: without it the threshold
+    # pushes into the theta-join condition and the intersect runs up to 4x
+    # per pair; the scored all-pairs table IS this query's labeled
+    # quadratic intermediate, so materializing it changes nothing about its
+    # (deliberate) O(n^2) COMPUTE shape. It does give the scored pairs
+    # quadratic executor-storage residency the lazy plan did not have —
+    # acceptable for the labeled differential baseline at fixture SFs, and
+    # this query must never run beyond them (the prefix join is the
+    # declared scale path).
+    scored = barrier(
+        a.join(b, F.col("doc_a") < F.col("doc_b")).select("doc_a", "doc_b", jac.alias("jaccard"))
     )
+    return scored.filter(F.col("jaccard") >= JACCARD_THRESHOLD)
 
 
 def _prefix_threshold_fraction(tau: float):
@@ -226,11 +223,10 @@ def _jaccard_prefix_candidates(docs: DataFrame, tau: float):
     # prefix self-join, verify, barrier) — the extra 32-way task launches
     # across every stage cost more than the map win (bench: t8 2.29 ->
     # 2.50 s AGAINST a 1.23x ambient tailwind; plain/t7 flat-to-worse).
-    d = (
-        docs.select("doc_id", distinct_tokens().alias("toks"))
-        # empty-token docs: same 0/0 exclusion as the quadratic baseline
-        .filter(F.size("toks") > 0)
-        .localCheckpoint(eager=False)  # df build + verify joins (3 consumers)
+    # empty-token docs: same 0/0 exclusion as the quadratic baseline;
+    # barrier for the df build + both verify joins (3 consumers)
+    d = barrier(
+        docs.select("doc_id", distinct_tokens().alias("toks")).filter(F.size("toks") > 0)
     )
     tok = d.select("doc_id", F.explode("toks").alias("token"))
     df_tbl = tok.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
@@ -360,23 +356,19 @@ def jaccard_prefix_pairs(
     b = d.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("toks_b"))
     inter = F.size(F.array_intersect("toks_a", "toks_b"))
     jac = inter.cast("double") / (F.size("toks_a") + F.size("toks_b") - inter)
-    scored = (
-        cands.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        # Materialization barrier BEFORE the threshold filter (round 16,
-        # guide §7.2 "duplicated subtrees"): left as one lazy plan,
-        # Catalyst pushes `jaccard >= tau` through the projection into the
-        # verify join's condition, so array_intersect — the per-candidate
-        # hot loop — is evaluated up to four times per pair (twice in the
-        # join condition's numerator/denominator, twice again in the
-        # output projection). Checkpointing the scored candidates pins the
-        # intersect to ONE evaluation per candidate; the materialized
-        # table is candidate-linear (doc_a, doc_b, jaccard — 24 bytes a
-        # row), and the measured effect at sf0.1 is 2.2-2.3x on the
-        # tau=0.7/0.8 query points. Same rows, same IEEE bits: the filter
-        # below compares the identical double expression value.
-        .localCheckpoint(eager=False)
+    # Materialization barrier BEFORE the threshold filter: left as one
+    # lazy plan, Catalyst pushes `jaccard >= tau` through the projection
+    # into the verify join's condition, so array_intersect — the
+    # per-candidate hot loop — is evaluated up to four times per pair
+    # (twice in the join condition's numerator/denominator, twice again in
+    # the output projection). Checkpointing the scored candidates pins the
+    # intersect to ONE evaluation per candidate; the materialized table is
+    # candidate-linear (doc_a, doc_b, jaccard — 24 bytes a row), and the
+    # measured effect at sf0.1 is 2.2-2.3x on the tau=0.7/0.8 query
+    # points. Same rows, same IEEE bits: the filter below compares the
+    # identical double expression value.
+    scored = barrier(
+        cands.join(a, "doc_a").join(b, "doc_b").select("doc_a", "doc_b", jac.alias("jaccard"))
     )
     # final threshold on the double value — the same expression (and
     # therefore the same IEEE bits) as the quadratic baseline/oracle
@@ -654,7 +646,7 @@ def containment_report(
             .filter(F.col("_df") <= max_shingle_df)
             .drop("_df")
         )
-    sh = sh.localCheckpoint(eager=False)  # sizes agg + both pair-join sides
+    sh = barrier(sh)  # sizes agg + both pair-join sides
     sz = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     pairs = (
         sh.join(
@@ -1284,11 +1276,10 @@ def q_dedup_embedding_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vector import cosine_similarity
     from .similarity import CAND_STRIDE, lsh_band_signatures
 
-    e0 = (
+    e0 = barrier(
         load_vectors(spark, sf_dir)
         .filter(F.col("vec_id") % CAND_STRIDE == 0)
         .select("vec_id", "embedding")
-        .localCheckpoint(eager=False)
     )
     sigs = e0.select(
         "vec_id", F.explode(lsh_band_signatures("embedding")).alias("bs")
@@ -1336,72 +1327,59 @@ def connected_components(
     classpath). Each iteration does BOTH a neighbor-min step and a
     pointer-jumping shortcut (label := min(label, label-of-label), the
     hash-to-min move), so the frontier distance covered per round roughly
-    doubles and iterations ≈ log(diameter) — FIXED round 12: the original
-    loop propagated one hop per round, so ``max_iter=25`` silently
-    mislabeled any component with diameter > 25 (a 61-node chain came back
-    as 36 fragments; found by the randomized union-find differential, now a
-    committed regression test).
+    doubles and iterations ≈ log(diameter). Propagating one hop per round
+    would silently mislabel any component with diameter > ``max_iter``
+    (a 61-node chain came back as 36 fragments; a regression test pins it).
 
-    REWRITTEN round 16 (the full-registry sweep's top untracked outlier):
-    the old loop used ``cache()`` + a lazy ``localCheckpoint`` every 4th
-    iteration and a convergence count every 2nd — but a cache is only
-    materialized when an ACTION touches it, and the skipped-check
-    iterations never ran one, so each convergence count re-planned a
-    multi-iteration join tree over unmaterialized cached subplans (AQE
-    re-optimizing every one). Measured at sf0.1 (488 nodes, 43k pairs —
-    trivial data): 87 s, with single iterations costing 17-64 s of pure
-    driver-side planning. The pagerank discipline fixes it: a
-    ``localCheckpoint`` every iteration truncates lineage AND AQE state to
-    a materialized leaf — same four iterations, 3.4 s total (25x). Round
-    17 tightened the iteration to one job: the checkpoint is LAZY and the
-    convergence count is the action that materializes it (the round-16
-    loop paid an eager-checkpoint job AND a count job), and the pointer
-    jump runs FIRST, against the materialized previous labels, so its
-    self-join scans checkpoint blocks instead of duplicating the
-    neighbor-min aggregation under both join branches. At scale the
-    per-iteration materialization is one node-count-sized table write
-    (the iterative-algorithm standard), and checking every iteration is
-    cheaper than skipping: the count rides the materialization and buys
-    the earliest possible exit.
+    Every iteration ends in a lazy barrier: it truncates lineage AND AQE
+    state to a materialized leaf, and the convergence count is the action
+    that materializes it, so an iteration is one job. A ``cache()`` with a
+    convergence count every few iterations instead re-planned a
+    multi-iteration join tree over unmaterialized cached subplans on each
+    count: 87 s against 3.4 s at sf0.1 (488 nodes, 43k pairs), almost all
+    of it driver-side planning. The pointer jump runs FIRST, against the
+    materialized previous labels, so its self-join scans barrier blocks
+    instead of duplicating the neighbor-min aggregation under both join
+    branches. At scale the per-iteration materialization is one
+    node-count-sized table write (the iterative-algorithm standard), and
+    checking every iteration is cheaper than skipping: the count rides the
+    materialization and buys the earliest possible exit.
     Returns ``(node, component)``."""
-    edges = (
+    edges = barrier(
         pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
         .union(pairs.select(F.col(b).alias("src"), F.col(a).alias("dst")))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        eager=True,
     )
-    labels = (
-        edges.select(F.col("src").alias("node")).distinct().withColumn("component", F.col("node"))
-    ).localCheckpoint()
-    # Static edge table WITH SELF-LOOPS (round 16): a self-loop row per node
+    labels = barrier(
+        edges.select(F.col("src").alias("node")).distinct().withColumn("component", F.col("node")),
+        eager=True,
+    )
+    # Static edge table WITH SELF-LOOPS: a self-loop row per node
     # folds the node's OWN previous label into the neighbor-min aggregation,
     # so the per-iteration shape is ONE join + one groupBy instead of
     # join + groupBy + a second labels left-join. The self rows are flagged
     # so the same aggregation also emits the pre-iteration label (`old`)
     # for the fused convergence probe — max(when(is_self, old)) is exactly
     # the node's own label, since every node has exactly one self row.
-    edges_self = (
-        edges.select("src", "dst", F.lit(False).alias("is_self"))
-        .union(
+    edges_self = barrier(
+        edges.select("src", "dst", F.lit(False).alias("is_self")).union(
             labels.select(
                 F.col("node").alias("src"),
                 F.col("node").alias("dst"),
                 F.lit(True).alias("is_self"),
             )
-        )
-        .localCheckpoint()
+        ),
+        eager=True,
     )
     for _it in range(max_iter):
-        # JUMP-FIRST iteration order (round 17, guide §7.2/§2): the round-16
-        # loop ran neighbor-min first and pointer-jumped on its OWN output —
-        # a self-join on an unmaterialized aggregate, so the join+groupBy
-        # subtree sat under both join branches, and the eager checkpoint +
-        # a separate convergence count made ~2 full jobs per iteration on
-        # top of it. Jumping FIRST runs the label := min(label,
-        # label-of-label) self-join against the MATERIALIZED labels table
-        # (a checkpointed LogicalRDD — both branches scan blocks, nothing
-        # recomputes), and the neighbor-min step then consumes the jumped
-        # table once. Fixpoint and exit are unchanged: both operators only
+        # JUMP-FIRST iteration order: pointer-jumping on the neighbor-min
+        # step's OWN output would self-join an unmaterialized aggregate, so
+        # the join+groupBy subtree would sit under both join branches.
+        # Jumping FIRST runs the label := min(label, label-of-label)
+        # self-join against the MATERIALIZED labels table (a checkpointed
+        # LogicalRDD — both branches scan blocks, nothing recomputes), and
+        # the neighbor-min step then consumes the jumped table once. Fixpoint and exit are unchanged: both operators only
         # ever lower labels, and exiting on new == old forces (squeeze:
         # new <= jumped <= old = new) jump AND step to be identities, i.e.
         # the same fixpoint the step-first loop returns — every node keeps
@@ -1420,18 +1398,16 @@ def connected_components(
         # neighbor-min INCLUDING self (the least(own, nbr_min) fold) + the
         # pre-iteration label for the convergence probe, in one aggregation;
         # self-loops guarantee every node keeps a row even with no in-edges
-        new_labels = (
+        # LAZY barrier: the convergence count below is the action that
+        # materializes it, so lineage/AQE truncation rides the count — ONE
+        # job per iteration, not an eager-checkpoint job AND a count job.
+        new_labels = barrier(
             edges_self.join(jumped, edges_self.src == jumped.node)
             .groupBy(F.col("dst").alias("node"))
             .agg(
                 F.min("component").alias("component"),
                 F.max(F.when(F.col("is_self"), F.col("old"))).alias("old"),
             )
-            # LAZY checkpoint: the convergence count below is the action
-            # that materializes it, so lineage/AQE truncation rides the
-            # count — ONE job per iteration where the round-16 loop paid
-            # an eager-checkpoint job AND a count job.
-            .localCheckpoint(eager=False)
         )
         changed = new_labels.filter(F.col("component") != F.col("old")).count()
         labels = new_labels.select("node", "component")
@@ -1968,9 +1944,11 @@ def _build_semdedup_assign(
     # the same K-row table q_vec_kmeans_lloyd emits)
     if centers is None:
         centers = lloyd_kmeans(vs, k)
-    return (
-        nearest_center(vs, centers, lambda c: _l2sq("embedding", c["c"]))
-        .select(
+    # consumed by both sides of the within-cluster self-join, the
+    # sub-bucket sizing agg, and the output projection — one corpus
+    # scan + one assignment fold, not four
+    return barrier(
+        nearest_center(vs, centers, lambda c: _l2sq("embedding", c["c"])).select(
             "vec_id",
             "embedding",
             "center_id",
@@ -1982,10 +1960,6 @@ def _build_semdedup_assign(
             # the oracle, which spells norms inline, still hash-matches.
             norm("embedding").alias("nrm"),
         )
-        # consumed by both sides of the within-cluster self-join, the
-        # sub-bucket sizing agg, and the output projection — one corpus
-        # scan + one assignment fold, not four
-        .localCheckpoint(eager=False)
     )
 
 
@@ -2092,13 +2066,12 @@ def semantic_dedup(
             raise ValueError("keep='centroid_far' requires centers when assign is precomputed")
         cw = centers.select("center_id", F.col("c").alias("_c"))
         w = W.partitionBy("center_id", "salt").orderBy(F.col("dc").desc(), "vec_id")
-        pri = (
+        # consumed twice (each side of the self-join), like assign
+        pri = barrier(
             sized.join(F.broadcast(cw), "center_id")
             .withColumn("dc", _l2sq("embedding", F.col("_c")))
             .withColumn("pri", F.row_number().over(w))
             .select("vec_id", "embedding", "center_id", "nrm", "salt", "pri")
-            # consumed twice (each side of the self-join), like assign
-            .localCheckpoint(eager=False)
         )
     else:
         raise ValueError(f"keep must be 'min_id' or 'centroid_far', got {keep!r}")

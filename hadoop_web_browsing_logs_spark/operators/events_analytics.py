@@ -21,6 +21,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
+from ..session import barrier
 from ._util import t
 
 WEEK_SECONDS = 7 * 86400
@@ -1366,7 +1367,7 @@ def q_events_type_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull() & F.col("event_type").isNotNull()
     )
-    ut = e.select("user_id", "event_type").distinct().localCheckpoint(eager=False)
+    ut = barrier(e.select("user_id", "event_type").distinct())
     sizes = ut.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     a = ut.select("user_id", F.col("event_type").alias("type_a"))
     b = ut.select("user_id", F.col("event_type").alias("type_b"))

@@ -7,13 +7,13 @@ beyond-the-reference surface (SURVEY.md §2 Table B) alongside the other
 iterative algorithm already shipped, connected-components label propagation
 (``dedup.connected_components``). Both use the standard Spark shape for
 iteration when GraphFrames isn't on the classpath: a driver-side loop over
-distributed joins, with lazy ``localCheckpoint`` lineage truncation.
+distributed joins, with lazy ``session.barrier`` lineage truncation.
 
 Scale shape (100 TB): per iteration, ONE shuffle — the contribution
 aggregation keyed on ``dst``. The edge table (with out-weight ratios folded
 in) and the (node, n) base are repartitioned + sorted on their join keys and
-lazily checkpointed ONCE before the loop (under an AQE-off toggle so the
-LogicalRDD records the partitioning — see ``_aqe_off``); every iteration's
+lazily checkpointed ONCE before the loop (``barrier(keep_layout=True)``, so
+the checkpoint records the partitioning); every iteration's
 two sort-merge joins then consume the static sides with zero exchange and
 zero sort (plan-pinned by ``tests/test_graph.py``), re-sorting only the
 node-sized contribution table. The rank table is never wider than
@@ -29,13 +29,11 @@ fixed evaluation shape, mirrored literally in the DuckDB oracle.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
-from ..session import SessionMemo
+from ..session import SessionMemo, barrier
 from ._util import t
 from .relational import dsum, dsum_sql
 
@@ -53,30 +51,14 @@ PR_DIGITS = 15
 PR_DAMPING = 0.85
 PR_ITERATIONS = 3
 
-
-@contextmanager
-def _aqe_off(spark: SparkSession):
-    """Plan a subtree with AQE disabled. ``localCheckpoint`` copies the
-    physical plan's outputPartitioning/outputOrdering onto the resulting
-    LogicalRDD — but only when that plan is NOT an AdaptiveSparkPlanExec
-    wrapper, which reports unknown partitioning before materialization
-    (measured: with AQE on, a repartition+sort+checkpoint table was
-    re-exchanged AND re-sorted by every downstream join). The static-table
-    builds here are a single shuffle+sort, so AQE has nothing to re-plan
-    anyway; the OUTER iterative query still runs fully adaptive."""
-    old = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
+#: The plain variant's rank table is truncated every this many iterations.
+PR_TRUNCATE_EVERY = 4
 
 
 def pagerank(
     edges: DataFrame,
     iterations: int = PR_ITERATIONS,
     damping: float = PR_DAMPING,
-    truncate_every: int = 4,
     redistribute_dangling: bool = False,
 ) -> DataFrame:
     """Weighted PageRank after a FIXED number of synchronous iterations.
@@ -103,73 +85,63 @@ def pagerank(
     over this with their own delta probe.
     """
     teleport = 1.0 - damping
-    spark = edges.sparkSession
     # one-time builds, lazily checkpointed: iterations must not re-run them.
     # Each static table is repartition+sortWithinPartitions'ed on its join
-    # key BEFORE its checkpoint, under the _aqe_off toggle so the LogicalRDD
-    # actually records that partitioning/ordering (VERDICT r8: the
-    # un-partitioned checkpoints were re-exchanged and re-sorted by BOTH
-    # sort-merge joins in every iteration — 2-3 exchanges per step instead
-    # of the one the design intends).
-    with _aqe_off(spark):
-        nodes = (
-            edges.select(F.col("src").alias("node"))
-            .union(edges.select(F.col("dst").alias("node")))
-            .distinct()
-            .localCheckpoint(eager=False)
+    # key BEFORE a layout-keeping barrier; without the recorded layout both
+    # sort-merge joins re-exchange and re-sort them in every iteration
+    # (2-3 exchanges per step instead of the one the design intends).
+    nodes = barrier(
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
+        .distinct(),
+        keep_layout=True,
+    )
+    nn = nodes.agg(F.count(F.lit(1)).cast("double").alias("n"))
+    # (node, n) base, checkpointed ONCE: every iteration's teleport term
+    # reads it directly instead of re-aggregating the node count and
+    # re-broadcasting it per iteration (3 extra jobs at K=3, measured);
+    # hash(node) + sorted, so the per-iteration base⋈contrib left join
+    # (contrib arrives hash-partitioned on dst from its groupBy) moves
+    # and sorts NOTHING on the static side.
+    base = barrier(
+        nodes.crossJoin(F.broadcast(nn)).repartition("node").sortWithinPartitions("node"),
+        keep_layout=True,
+    )
+    outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
+    # same move for the edge table: hash(src) + sorted once, so the
+    # per-iteration ew⋈rank sort-merge join re-sorts only the node-sized
+    # rank side and the ONLY per-iteration exchange left is the
+    # dst-keyed contribution aggregation.
+    ew = barrier(
+        edges.join(outw, "src")
+        .select(
+            "src",
+            "dst",
+            # try_divide, not `/`: a node whose out-weights SUM to zero
+            # (all-zero or cancelling +/- weights — legal inputs to this
+            # public API) makes ANSI Spark throw DIVIDE_BY_ZERO where
+            # DuckDB's division yields NULL. try_divide is DuckDB's
+            # exact semantics and bit-identical for non-zero
+            # denominators; a NULL ratio makes the edge carry no mass
+            # (NULL products are skipped by the dsum kernel in both
+            # engines), so such a node leaks its mass like a dangling
+            # node — deterministic, engine-identical.
+            F.try_divide(F.col("w").cast("double"), F.col("ow").cast("double")).alias("ratio"),
         )
-        nn = nodes.agg(F.count(F.lit(1)).cast("double").alias("n"))
-        # (node, n) base, checkpointed ONCE: every iteration's teleport term
-        # reads it directly instead of re-aggregating the node count and
-        # re-broadcasting it per iteration (3 extra jobs at K=3, measured);
-        # hash(node) + sorted, so the per-iteration base⋈contrib left join
-        # (contrib arrives hash-partitioned on dst from its groupBy) moves
-        # and sorts NOTHING on the static side.
-        base = (
-            nodes.crossJoin(F.broadcast(nn))
+        .repartition("src")
+        .sortWithinPartitions("src"),
+        keep_layout=True,
+    )
+    # dangling node set (no out-edges), static and node-sized; only
+    # built when the redistribution variant needs it
+    dang = None
+    if redistribute_dangling:
+        dang = barrier(
+            nodes.join(outw.select(F.col("src").alias("node")), "node", "left_anti")
             .repartition("node")
-            .sortWithinPartitions("node")
-            .localCheckpoint(eager=False)
+            .sortWithinPartitions("node"),
+            keep_layout=True,
         )
-        outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
-        # same move for the edge table: hash(src) + sorted once, so the
-        # per-iteration ew⋈rank sort-merge join re-sorts only the node-sized
-        # rank side and the ONLY per-iteration exchange left is the
-        # dst-keyed contribution aggregation.
-        ew = (
-            edges.join(outw, "src")
-            .select(
-                "src",
-                "dst",
-                # try_divide, not `/`: a node whose out-weights SUM to zero
-                # (all-zero or cancelling +/- weights — legal inputs to this
-                # public API) makes ANSI Spark throw DIVIDE_BY_ZERO where
-                # DuckDB's division yields NULL. try_divide is DuckDB's
-                # exact semantics and bit-identical for non-zero
-                # denominators; a NULL ratio makes the edge carry no mass
-                # (NULL products are skipped by the dsum kernel in both
-                # engines), so such a node leaks its mass like a dangling
-                # node — deterministic, engine-identical.
-                F.try_divide(
-                    F.col("w").cast("double"), F.col("ow").cast("double")
-                ).alias("ratio"),
-            )
-            .repartition("src")
-            .sortWithinPartitions("src")
-            .localCheckpoint(eager=False)
-        )
-        # dangling node set (no out-edges), static and node-sized; only
-        # built when the redistribution variant needs it
-        dang = None
-        if redistribute_dangling:
-            dang = (
-                nodes.join(
-                    outw.select(F.col("src").alias("node")), "node", "left_anti"
-                )
-                .repartition("node")
-                .sortWithinPartitions("node")
-                .localCheckpoint(eager=False)
-            )
     ranks = base.select("node", (F.lit(1.0) / F.col("n")).alias("pr"))
     for i in range(iterations):
         contrib = (
@@ -217,14 +189,13 @@ def pagerank(
         # join + dangling-mass scalar), so an un-truncated lazy plan
         # duplicates the previous iteration's subtree 2^k times — exponential
         # plan growth AND double execution. The node-sized materialization is
-        # cheap; _aqe_off preserves hash(node) partitioning + ordering into
-        # the LogicalRDD, keeping the one-exchange-per-iteration shape.
+        # cheap; keep_layout preserves hash(node) partitioning + ordering,
+        # keeping the one-exchange-per-iteration shape.
         if redistribute_dangling:
             if (i + 1) < iterations:
-                with _aqe_off(spark):
-                    ranks = ranks.localCheckpoint(eager=False)
-        elif (i + 1) % truncate_every == 0 and (i + 1) < iterations:
-            ranks = ranks.localCheckpoint(eager=False)
+                ranks = barrier(ranks, keep_layout=True)
+        elif (i + 1) % PR_TRUNCATE_EVERY == 0 and (i + 1) < iterations:
+            ranks = barrier(ranks)
     return ranks
 
 
@@ -239,7 +210,7 @@ _EL_MEMO = SessionMemo()
 def _build_purchase_el(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    return (
+    return barrier(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .filter(F.col("o_custkey").isNotNull() & F.col("l_suppkey").isNotNull())
         .select(
@@ -248,7 +219,6 @@ def _build_purchase_el(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
-        .localCheckpoint(eager=False)
     )
 
 
@@ -421,19 +391,17 @@ def triangle_participation(edges: DataFrame) -> DataFrame:
     pivot/endpoint keys; the degree table is node-sized (AQE broadcasts it
     while it fits).
     """
-    # Pin the two multiply-consumed edge tables (round 17, guide §7.2
-    # "duplicated subtrees"): `edges` feeds the degree union (twice) AND
-    # the orientation join, `oriented` feeds both wedge legs AND the
-    # closing semi-join — Catalyst does not CSE across join/union inputs,
-    # so the unpinned plan re-ran the upstream edge build and the
-    # 3-table orientation join per consumer (AQE's exchange reuse only
-    # dedups the shuffles, not the operator work above them). Both
-    # materializations are EDGE-sized — the standard persisted
+    # Pin the two multiply-consumed edge tables: `edges` feeds the degree
+    # union (twice) AND the orientation join, `oriented` feeds both wedge
+    # legs AND the closing semi-join — Catalyst does not CSE across
+    # join/union inputs, so the unpinned plan re-ran the upstream edge
+    # build and the 3-table orientation join per consumer (AQE's exchange
+    # reuse only dedups the shuffles, not the operator work above them).
+    # Both materializations are EDGE-sized — the standard persisted
     # intermediates of any multi-pass triangle algorithm at scale.
-    # Adjudicated warm AND cold (the novelty lesson): interleaved A/B
-    # 2.97 -> 2.11 s, cold fresh-process A/B 3.19/4.28 -> 2.66/3.45 s at
-    # sf0.1, rows identical.
-    edges = edges.localCheckpoint(eager=False)
+    # Measured warm and cold at sf0.1: 2.97 -> 2.11 s warm, 3.19/4.28 ->
+    # 2.66/3.45 s cold, rows identical.
+    edges = barrier(edges)
     deg = (
         edges.select(F.col("a").alias("node"))
         .union(edges.select(F.col("b").alias("node")))
@@ -445,7 +413,7 @@ def triangle_participation(edges: DataFrame) -> DataFrame:
     lt = (F.col("deg_a") < F.col("deg_b")) | (
         (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
     )
-    oriented = (
+    oriented = barrier(
         edges.join(da, "a")
         .join(db, "b")
         .select(
@@ -454,7 +422,6 @@ def triangle_participation(edges: DataFrame) -> DataFrame:
             F.when(lt, F.col("deg_b")).otherwise(F.col("deg_a")).alias("deg_dst"),
             F.when(lt, F.col("b")).otherwise(F.col("a")).alias("key_dst"),
         )
-        .localCheckpoint(eager=False)
     )
     # wedge (u→v, u→w) deduped by the same (deg, id) order on v, w; the
     # closing edge, if present, is oriented v→w by transitivity
@@ -608,7 +575,7 @@ def label_propagation(edges: DataFrame, iterations: int = LPA_ITERATIONS) -> Dat
     sums. The label table itself enters the sort-merge join against the
     src-partitioned checkpointed edge table with NO exchange or sort: it
     leaves the argmax aggregation hash(dst)=hash(node) partitioned and
-    sorted, and the per-iteration ``_aqe_off`` checkpoint preserves both
+    sorted, and the per-iteration layout-keeping barrier preserves both
     (the q_graph_label_propagation row of tests/plan_shapes.json pins the
     last iteration's two hash exchanges and its exchange-free join).
     Collapsing to one exchange by pre-repartitioning on dst would ship the
@@ -617,21 +584,19 @@ def label_propagation(edges: DataFrame, iterations: int = LPA_ITERATIONS) -> Dat
     needed anywhere; the argmax is min(struct(-weight, label)), identical to
     the oracle's ROW_NUMBER(ORDER BY weight DESC, label).
     """
-    spark = edges.sparkSession
-    with _aqe_off(spark):
-        e = (
-            edges.select("src", "dst", F.col("w").cast("bigint").alias("w"))
-            .repartition("src")
-            .sortWithinPartitions("src")
-            .localCheckpoint(eager=False)
-        )
-        labels = (
-            e.select(F.col("src").alias("node"))
-            .union(e.select(F.col("dst").alias("node")))
-            .distinct()
-            .select("node", F.col("node").alias("label"))
-            .localCheckpoint(eager=False)
-        )
+    e = barrier(
+        edges.select("src", "dst", F.col("w").cast("bigint").alias("w"))
+        .repartition("src")
+        .sortWithinPartitions("src"),
+        keep_layout=True,
+    )
+    labels = barrier(
+        e.select(F.col("src").alias("node"))
+        .union(e.select(F.col("dst").alias("node")))
+        .distinct()
+        .select("node", F.col("node").alias("label")),
+        keep_layout=True,
+    )
     for i in range(iterations):
         votes = (
             e.join(labels, e.src == labels.node)
@@ -643,8 +608,7 @@ def label_propagation(edges: DataFrame, iterations: int = LPA_ITERATIONS) -> Dat
         )
         labels = best.select(F.col("dst").alias("node"), F.col("b.label").alias("label"))
         if (i + 1) < iterations:
-            with _aqe_off(spark):
-                labels = labels.localCheckpoint(eager=False)
+            labels = barrier(labels, keep_layout=True)
     return labels
 
 
@@ -814,16 +778,13 @@ def bfs_frontier(edges: DataFrame, seeds: DataFrame, max_hops: int = BFS_MAX_HOP
     visited = seeds.select("node").distinct().select("node", F.lit(0).alias("dist"))
     frontier = visited.select("node")
     for hop in range(1, max_hops + 1):
-        frontier = (
+        frontier = barrier(
             edges.join(frontier.withColumnRenamed("node", "src"), "src")
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=False)
         )
-        visited = visited.union(
-            frontier.select("node", F.lit(hop).alias("dist"))
-        ).localCheckpoint(eager=False)
+        visited = barrier(visited.union(frontier.select("node", F.lit(hop).alias("dist"))))
     return visited.select("node", F.col("dist").cast("int").alias("dist"))
 
 

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text_stats import DUCK_WS_TOKENS, ws_tokens
 from ..plans.registry import query
+from ..session import barrier
 from ..sources.readers import local_frame
 from ._util import fan_out, t
 from .dedup import JACCARD_THRESHOLD, PAIR_STRIDE
@@ -1178,9 +1179,9 @@ def bpe_train(word_dict: DataFrame, n_merges: int) -> list[tuple]:
     frequent adjacent pair (count DESC, then lexicographic left/right — fully
     deterministic) and folds it into the dict. One driver-side ``.first()``
     per iteration — the same iterate-measure-update shape as k-means; the
-    dict is localCheckpoint'ed each step so fold lineage never stacks."""
+    dict goes behind a barrier each step so fold lineage never stacks."""
     merges = []
-    cur = word_dict.localCheckpoint(eager=False)
+    cur = barrier(word_dict)
     for rank in range(1, n_merges + 1):
         top = (
             bpe_pair_counts(cur)
@@ -1190,9 +1191,7 @@ def bpe_train(word_dict: DataFrame, n_merges: int) -> list[tuple]:
         if top is None or top.cnt is None:
             break
         merges.append((rank, top.left_sym, top.right_sym, top.left_sym + top.right_sym, top.cnt))
-        cur = bpe_apply_merge(cur, top.left_sym, top.right_sym).localCheckpoint(
-            eager=False
-        )
+        cur = barrier(bpe_apply_merge(cur, top.left_sym, top.right_sym))
     return merges
 
 
@@ -1256,7 +1255,7 @@ _BPE_SCHEMA = "rank int, left_sym string, right_sym string, merged string, cnt b
         "corpus scan builds the dict; every iteration runs on the "
         "vocabulary-sized table with a JVM-side aggregate() fold and one "
         "driver .first() for the argmax (the k-means iterate shape); "
-        "localCheckpoint truncates fold lineage each step. Returns the "
+        "a barrier truncates fold lineage each step. Returns the "
         "merge table (rank, left_sym, right_sym, merged, cnt) — the model "
         "artifact a tokenizer ships."
     ),
@@ -1418,7 +1417,7 @@ def bpe_encode(words: DataFrame, merges=BPE_ENCODE_MERGES, checkpoint_every: int
             *passthrough, F.expr(_merge_fold_sql(l, r)).alias("syms")
         )
         if (k + 1) % checkpoint_every == 0 and (k + 1) < len(merges):
-            cur = cur.localCheckpoint(eager=False)
+            cur = barrier(cur)
     return cur
 
 
@@ -1541,9 +1540,11 @@ def q_llm_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text_stats import fingerprint_md5
 
     docs = t(spark, sf_dir, "documents")
-    d = docs.select(
-        "source", fingerprint_md5("text").alias("fp"), F.size(ws_tokens("text")).alias("n_tok")
-    ).localCheckpoint(eager=False)
+    d = barrier(
+        docs.select(
+            "source", fingerprint_md5("text").alias("fp"), F.size(ws_tokens("text")).alias("n_tok")
+        )
+    )
     q = d.filter((F.col("n_tok") >= 10) & (F.col("n_tok") <= 5000))
     u = q.groupBy("source", "fp").agg(F.min("n_tok").alias("n_tok"))
     raw = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_raw"))

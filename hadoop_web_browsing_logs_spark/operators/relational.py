@@ -41,6 +41,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
+from ..session import barrier
 from ._util import one_group, t
 
 
@@ -729,12 +730,12 @@ def with_global_rank(df: DataFrame, order_cols: list, num_partitions: int = 32, 
     partitioner does. Adds ``rn_col`` (BIGINT, 1-based) and ``_n_total``.
 
     The range-partitioned input feeds two branches (local ranks and the
-    per-partition count table); a lazy localCheckpoint materializes it once —
+    per-partition count table); a lazy barrier materializes it once —
     no recomputation of the upstream plan, and both branches structurally see
     the SAME partition boundaries instead of relying on the range sampler
     re-executing identically.
     """
-    s = df.repartitionByRange(num_partitions, *order_cols).localCheckpoint(eager=False)
+    s = barrier(df.repartitionByRange(num_partitions, *order_cols))
     pid_df = s.withColumn("_pid", F.spark_partition_id())
     wl = W.partitionBy("_pid").orderBy(*order_cols)
     local = pid_df.withColumn("_lrn", F.row_number().over(wl))
@@ -767,10 +768,9 @@ def with_global_cumsum(
 
     Range-repartition on the sort keys → per-partition local running sum →
     add broadcast per-partition value totals' prefix sums. Adds ``out_col``
-    (BIGINT, inclusive running total in the global order). As in
-    :func:`with_global_rank`, the partitioned input is lazily
-    localCheckpoint'd — both consumers read the same materialized blocks."""
-    s = df.repartitionByRange(num_partitions, *order_cols).localCheckpoint(eager=False)
+    (BIGINT, inclusive running total in the global order). The partitioned
+    input goes behind a barrier, as in :func:`with_global_rank`."""
+    s = barrier(df.repartitionByRange(num_partitions, *order_cols))
     pid_df = s.withColumn("_pid", F.spark_partition_id())
     wl = (
         W.partitionBy("_pid").orderBy(*order_cols).rowsBetween(W.unboundedPreceding, 0)

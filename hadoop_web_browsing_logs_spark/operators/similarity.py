@@ -6,19 +6,6 @@ The brute force generalizes the reference's nearest-center scan
 all-pairs crossJoin is O(n·m); the LSH variant buckets vectors by a 16-bit
 hyperplane signature so candidate generation becomes an equi-join on the
 bucket key — a shuffle join on a small key space instead of a nested loop.
-
-Storage-block lifecycle (ADVICE r5): the lazy ``localCheckpoint(eager=False)``
-frames in the recall/candidate paths pin RDD blocks that outlive the
-consuming action. This retention is INTENTIONAL for the engine's execution
-model — queries are single-shot plan factories whose result is consumed once
-by the caller (driver gate, bench pass, pytest), and the blocks let the
-top-k and candidate-count branches of one invocation share one
-materialization; unpersisting inside the factory would race the caller's
-action. Long-lived sessions that invoke these factories repeatedly should
-call :func:`hadoop_web_browsing_logs_spark.session.release_caches`
-between logical requests to drop accumulated blocks (bench isolation and the
-pytest suite run each query a bounded number of times, so local runs stay
-bounded without it).
 """
 
 from __future__ import annotations
@@ -37,6 +24,7 @@ from ..functions.vector import (
     norm,
 )
 from ..plans.registry import query
+from ..session import barrier
 from ._util import fan_out, t
 from .vectors import DUCK_VECTORS, N_CENTERS, cosine_dist, fixture_centers, load_vectors, nearest_center
 
@@ -215,17 +203,15 @@ def lsh_candidate_pairs(spark: SparkSession, sf_dir: str, n_bands: int = N_BANDS
     # (and the checkpointed signature table inherited that 1 partition).
     # Per-row fold, no cross-row accumulation: partition-independent.
     full = fan_out(load_vectors(spark, sf_dir))
-    e = (
+    # materialize once: both sides of the band equi-join scan this
+    # subtree, so the signature fold — 16 hyperplane dots per vector, the
+    # corpus-scan hot loop — would run TWICE per query. The table is
+    # (vec_id, band, sig): n_bands rows x 20 bytes per vector,
+    # corpus-linear and payload-free.
+    e = barrier(
         full.select(
             "vec_id", F.explode(lsh_band_signatures("embedding", n_bands)).alias("bs")
-        )
-        .select("vec_id", "bs.band", "bs.sig")
-        # materialize once (round 16): both sides of the band equi-join
-        # scan this subtree, so the signature fold — 16 hyperplane dots
-        # per vector, the corpus-scan hot loop — ran TWICE per query.
-        # The table is (vec_id, band, sig): n_bands rows x 20 bytes per
-        # vector, corpus-linear and payload-free.
-        .localCheckpoint(eager=False)
+        ).select("vec_id", "bs.band", "bs.sig")
     )
     queries = e.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
         F.col("vec_id").alias("q_id"), "band", "sig"
@@ -256,10 +242,10 @@ def lsh_ann_recall(
 ) -> DataFrame:
     pairs = lsh_candidate_pairs(spark, sf_dir, n_bands)
     sim = cosine_similarity("q_vec", "c_vec")
-    # score once, materialize once (lazy localCheckpoint): the top-k branch
-    # and — for the margin gate — the per-query candidate-count branch both
-    # read the same blocks instead of re-running band-join + cosine verify
-    scored = pairs.select("q_id", "c_id", sim.alias("sim")).localCheckpoint(eager=False)
+    # score once, materialize once: the top-k branch and — for the margin
+    # gate — the per-query candidate-count branch both read the same blocks
+    # instead of re-running band-join + cosine verify
+    scored = barrier(pairs.select("q_id", "c_id", sim.alias("sim")))
     return _recall_at_k(spark, sf_dir, scored, include_candidate_counts)
 
 
@@ -408,9 +394,9 @@ def q_sim_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ivf_ann_recall(
     spark: SparkSession, sf_dir: str, include_candidate_counts: bool = False
 ) -> DataFrame:
-    # the scored candidates materialize once (lazy localCheckpoint) so the
-    # gate's candidate-count branch reuses them instead of re-probing
-    scored = q_sim_ivf_candidates(spark, sf_dir).localCheckpoint(eager=False)
+    # the scored candidates materialize once so the gate's candidate-count
+    # branch reuses them instead of re-probing
+    scored = barrier(q_sim_ivf_candidates(spark, sf_dir))
     return _recall_at_k(spark, sf_dir, scored, include_candidate_counts)
 
 
@@ -491,11 +477,10 @@ def _lsh_candidates_oracle() -> str:
     ),
 )
 def q_sim_lsh_candidates_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e0 = (
+    e0 = barrier(
         load_vectors(spark, sf_dir)
         .filter(F.col("vec_id") % CAND_STRIDE == 0)
         .select("vec_id", "embedding")
-        .localCheckpoint(eager=False)
     )
     sigs = e0.select("vec_id", F.explode(lsh_band_signatures("embedding")).alias("bs")).select(
         "vec_id", "bs.band", "bs.sig"

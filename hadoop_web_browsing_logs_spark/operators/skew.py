@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
+from ..session import barrier
 from ._util import t
 
 
@@ -105,10 +106,10 @@ def bloom_prefilter(fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str
     tens of thousands of words — made each row pay k full scans, 50x
     slower than the join form at sf0.1. Spark's own InjectRuntimeFilter
     likewise ships its bloom via broadcast exchange, not a map literal.)"""
-    # lazy localCheckpoint: the k probe joins all broadcast projections of
-    # the SAME words table — without it each join re-runs the scan + explode
-    # + bit_or aggregation (the plan showed 4 identical build subtrees)
-    words = build_bloom(dim, dim_key, bits).localCheckpoint(eager=False)
+    # barrier: the k probe joins all broadcast projections of the SAME
+    # words table — without it each join re-runs the scan + explode +
+    # bit_or aggregation (the plan showed 4 identical build subtrees)
+    words = barrier(build_bloom(dim, dim_key, bits))
     out = fact
     for i in range(BLOOM_HASHES):
         pos = F.pmod(F.xxhash64(F.col(fact_key), F.lit(i)), F.lit(bits))

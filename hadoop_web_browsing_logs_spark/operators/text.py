@@ -45,6 +45,7 @@ from ..functions.text_stats import (
     ws_tokens,
 )
 from ..plans.registry import query
+from ..session import barrier
 from ..sources.readers import local_frame
 from .relational import dsum_sql
 from ._util import fan_out, one_group, t
@@ -345,11 +346,10 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus-sized shuffle total, instead of a second countDistinct shuffle
     # that maintains a doc-set per term. The (doc,term)-sized tf table is
     # what gets checkpointed for reuse, not the raw token stream.
-    tf = (
+    tf = barrier(
         tokenize(docs)
         .groupBy("doc_id", F.col("token").alias("term"))
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
     )
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -790,7 +790,7 @@ def bm25_rank(
     # corpus, tripling the dominant 100 TB cost. The doc-sized result is
     # checkpointed once for its three consumers (tf explode, df cascade,
     # corpus token total).
-    per_doc = (
+    per_doc = barrier(
         tokenize(docs)
         .groupBy("doc_id")
         .agg(
@@ -800,7 +800,6 @@ def bm25_rank(
                 for i, term in enumerate(terms)
             ],
         )
-        .localCheckpoint(eager=False)
     )
     tf = per_doc.select(
         "doc_id",

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vector import dot, duck_cosine_distance, norm
 from ..plans.registry import query
-from ..session import SessionMemo
+from ..session import SessionMemo, barrier
 from ._util import fan_out, one_group, t
 
 N_CENTERS = 8
@@ -521,7 +521,7 @@ def covariance_fast(vs: DataFrame) -> DataFrame:
     part = vs.select("embedding").mapInPandas(gram, "i int, j int, v double")
     # one tiny exchange: <= (d(d+1)/2 + d + 1) keys regardless of corpus size;
     # checkpointed once for its three consumers (gram / mean / count slices)
-    agg = part.groupBy("i", "j").agg(F.sum("v").alias("v")).localCheckpoint(eager=False)
+    agg = barrier(part.groupBy("i", "j").agg(F.sum("v").alias("v")))
     n = agg.filter((F.col("i") == 0) & (F.col("j") == 0)).select(F.col("v").alias("n"))
     mean = agg.filter((F.col("i") == 0) & (F.col("j") > 0))
     ma = mean.select(F.col("j").alias("i"), F.col("v").alias("sa"))
@@ -700,7 +700,7 @@ def kmeans_lloyd(
         # caller's plan shows the real per-iteration shape and the final
         # K-row table is not pointlessly materialized twice
         if (it + 1) < iterations:
-            centers = centers.localCheckpoint(eager=False)
+            centers = barrier(centers)
     return centers
 
 
@@ -832,7 +832,7 @@ _LLOYD_MEMO = SessionMemo()
 
 
 def _fixture_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return lloyd_kmeans(load_vectors(spark, sf_dir), N_CENTERS).localCheckpoint(eager=False)
+    return barrier(lloyd_kmeans(load_vectors(spark, sf_dir), N_CENTERS))
 
 
 def _lloyd_publish(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -101,8 +101,45 @@ def get_spark(
     return spark
 
 
+def barrier(df: DataFrame, *, eager: bool = False, keep_layout: bool = False) -> DataFrame:
+    """Truncate ``df``'s lineage and keep its rows: the package's one
+    ``localCheckpoint(`` call. The operators put one where a frame is read
+    by several consumers or by every step of a driver-side loop.
+
+    - ``eager=False`` (the default) stores the blocks when the first action
+      that reads the frame runs; ``eager=True`` runs a job now.
+    - ``keep_layout=True`` plans the checkpoint with AQE off. The
+      checkpoint's LogicalRDD records the physical plan's partitioning and
+      ordering, but an adaptive plan reports unknown partitioning before it
+      runs, so a frame repartitioned and sorted on a join key would be
+      exchanged and sorted again by every join that reads it. Only this
+      one plan is built non-adaptively; the query around it stays adaptive.
+
+    The blocks are executor-local and outlive the action that consumes the
+    frame: a query factory cannot free them without racing its caller's
+    action, and they let the branches of one query share one
+    materialization. :func:`release_query_caches` frees them between
+    queries; a long-lived session calls :func:`release_caches` between
+    logical requests."""
+    if not keep_layout:
+        return df.localCheckpoint(eager=eager)
+    conf = df.sparkSession.conf
+    old = conf.get("spark.sql.adaptive.enabled", "true")
+    conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        return df.localCheckpoint(eager=eager)
+    finally:
+        conf.set("spark.sql.adaptive.enabled", old)
+
+
+def _barrier_rdd(df: DataFrame):
+    """The JVM RDD holding a lazy :func:`barrier`'s blocks: its analyzed
+    plan is a ``LogicalRDD`` over it."""
+    return df._jdf.queryExecution().analyzed().rdd()
+
+
 class SessionMemo:
-    """A bounded memo of shared ``localCheckpoint(eager=False)`` tables,
+    """A bounded memo of shared lazy :func:`barrier` tables,
     keyed by ``(applicationId, sf_dir)``: the graph edge list, the Lloyd
     centers and the SemDeDup assignment that several registered queries
     read, built once per session like a warehouse table every consumer
@@ -131,7 +168,7 @@ class SessionMemo:
         return self.put(spark, sf_dir, build(spark, sf_dir))
 
     def put(self, spark: SparkSession, sf_dir: str, df: DataFrame) -> DataFrame:
-        """Publish ``df`` (a direct lazy-``localCheckpoint`` result),
+        """Publish ``df`` (a direct lazy :func:`barrier` result),
         freeing the entry it displaces and the oldest entries past the
         cap."""
         key = (spark.sparkContext.applicationId, sf_dir)
@@ -156,7 +193,7 @@ class SessionMemo:
         ids: set[int] = set()
         for key, df in list(self._entries.items()):
             try:
-                rdd = df._jdf.queryExecution().analyzed().rdd()
+                rdd = _barrier_rdd(df)
                 if not rdd.isCheckpointed():
                     rdd.count()
                 ids.add(rdd.id())
@@ -170,7 +207,7 @@ _MEMOS: list[SessionMemo] = []
 
 def release_query_caches(spark: SparkSession) -> int:
     """Per-query storage hygiene: drop the cached DataFrames and
-    localCheckpoint blocks the last query pinned, while keeping every
+    :func:`barrier` blocks the last query pinned, while keeping every
     :class:`SessionMemo` entry alive and usable — unlike
     :func:`release_caches`, which clears the memos too. Query-local
     blocks are rebuilt from parquet on every call by contract, so
@@ -192,41 +229,25 @@ def release_query_caches(spark: SparkSession) -> int:
 
 
 def unpersist_checkpoint(df: DataFrame) -> None:
-    """Best-effort: free the storage blocks behind a ``localCheckpoint``'d
-    DataFrame being evicted from a memo; dropping the Python reference
-    alone would leak them until :func:`release_caches`. A lazily
-    checkpointed Dataset's analyzed plan is a ``LogicalRDD`` wrapping the
-    persisted RDD, reachable via py4j; anything unexpected (plan shape, a
-    dead JVM at interpreter shutdown) degrades to a no-op.
+    """Best-effort: free the storage blocks behind a lazy :func:`barrier`
+    frame being evicted from a memo; dropping the Python reference alone
+    would leak them until :func:`release_caches`. Anything unexpected
+    (plan shape, a dead JVM at interpreter shutdown) degrades to a no-op.
 
-    A localCheckpoint's lineage is truncated, so the evicted entry is
-    unusable after this call. The registered queries re-fetch through the
-    memo at build time and each query is collected before the next one
-    builds, so no live plan holds an evicted entry."""
+    A barrier's lineage is truncated, so the evicted entry is unusable
+    after this call. The registered queries re-fetch through the memo at
+    build time and each query is collected before the next one builds, so
+    no live plan holds an evicted entry."""
     try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        _barrier_rdd(df).unpersist(False)
     except Exception:
         pass
 
 
 def release_caches(spark: SparkSession) -> int:
-    """Drop every persisted/cached block the engine has accumulated: cached
-    DataFrames (CacheManager) and the RDD blocks pinned by lazy
-    ``localCheckpoint`` frames (similarity/global-rank paths — see
-    operators/similarity.py module docstring), and every
-    :class:`SessionMemo` entry over such blocks. Returns the number of
-    persistent RDDs released.
-
-    Query factories deliberately do NOT unpersist their own checkpoints (the
-    consuming action happens in the caller); a long-lived session embedding
-    this engine should call this between logical requests."""
+    """:func:`release_query_caches` after clearing every
+    :class:`SessionMemo`, so no block is kept. Returns the number of
+    persistent RDDs released."""
     for memo in _MEMOS:
         memo.clear()
-    spark.catalog.clearCache()
-    # JavaSparkContext exposes the persistent-RDD map as a java.util.Map,
-    # which py4j presents dict-like
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    rdds = list(jmap.values())
-    for jrdd in rdds:
-        jrdd.unpersist(False)
-    return len(rdds)
+    return release_query_caches(spark)

@@ -4,8 +4,12 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
+
+#: The checkout these tests belong to: the CLI runs from its root.
+REPO_ROOT = Path(__file__).resolve().parents[1]
 
 
 def _run(*args: str) -> subprocess.CompletedProcess:
@@ -13,7 +17,7 @@ def _run(*args: str) -> subprocess.CompletedProcess:
         [sys.executable, "-m", "hadoop_web_browsing_logs_spark", *args],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         timeout=120,
     )
 
@@ -80,7 +84,7 @@ def test_python_workers_import_package_outside_checkout(tmp_path):
     package's directory to the workers."""
     import os
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    repo = str(REPO_ROOT)
     code = (
         f"import sys; sys.path.insert(0, {repo!r})\n"
         "from hadoop_web_browsing_logs_spark.plans.registry import get_query\n"

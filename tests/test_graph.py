@@ -120,11 +120,11 @@ def test_pagerank_redistribution_equals_plain_when_no_dangling(spark):
 
 
 def test_pagerank_one_exchange_per_iteration(spark):
-    """Plan pin for the VERDICT r8 fix: the static edge/base tables are
-    repartitioned+sorted before their localCheckpoints (under the AQE-off
-    toggle so the LogicalRDD records it), leaving exactly ONE exchange per
-    iteration — the dst-keyed contribution aggregation — plus the final
-    orderBy. The un-partitioned checkpoints planned 2-3 exchanges/step."""
+    """Plan pin: the static edge/base tables are repartitioned+sorted
+    before their ``barrier(keep_layout=True)`` checkpoints, leaving exactly
+    ONE exchange per iteration — the dst-keyed contribution aggregation —
+    plus the final orderBy. Un-partitioned checkpoints planned 2-3
+    exchanges/step."""
     import re
 
     from hadoop_web_browsing_logs_spark.operators.graph import PR_ITERATIONS

@@ -133,23 +133,29 @@ def test_local_frame_is_a_typed_local_relation(spark, rows, ddl):
 
 
 def test_package_builds_frames_only_through_local_frame():
-    """``createDataFrame(<list>)`` and ``parallelize`` build a Python RDD;
-    the package builds its small tables with :func:`local_frame` only."""
+    """Two calls each have one place in the package.
+    ``createDataFrame(<list>)`` and ``parallelize`` build a Python RDD, so
+    small tables are built with :func:`local_frame` only; a lineage barrier
+    is :func:`~hadoop_web_browsing_logs_spark.session.barrier` only."""
     import inspect
     import re
 
     import hadoop_web_browsing_logs_spark as pkg
+    from hadoop_web_browsing_logs_spark import session
     from hadoop_web_browsing_logs_spark.sources import readers
 
     root = os.path.dirname(pkg.__file__)
-    helper = inspect.getsource(local_frame)
+    rules = [
+        (r"createDataFrame\(|\.parallelize\(", readers, local_frame),
+        (r"localCheckpoint\(", session, session.barrier),
+    ]
     offenders = []
     for path in glob.glob(f"{root}/**/*.py", recursive=True):
         with open(path, encoding="utf-8") as fh:
             src = fh.read()
-        if path == readers.__file__:
-            src = src.replace(helper, "")
-        offenders += [f"{path}: {m[0]}" for m in re.finditer(r".*(createDataFrame\(|\.parallelize\().*", src)]
+        for pattern, module, allowed in rules:
+            body = src.replace(inspect.getsource(allowed), "") if path == module.__file__ else src
+            offenders += [f"{path}: {m[0]}" for m in re.finditer(f".*({pattern}).*", body)]
     assert not offenders, offenders
 
 
